@@ -753,7 +753,7 @@ def check_decode_wide(spark) -> None:
     """Round 10 (VERDICT r9 #5): the projection-shaped streaming WIDE
     decode at scale — candump text lines (10% same-µs duplicate pairs)
     streamed as a real multi-micro-batch backlog, cell-compared against
-    the batch long-strategy decode, with the state-boundedness claim
+    the batch ``decode_wide``, with the state-boundedness claim
     MEASURED: peak aggregation-state rows must stay ~one batch's unique
     timestamps (state retires as the watermark passes), never the
     corpus total."""
@@ -860,7 +860,7 @@ def check_decode_wide(spark) -> None:
     bframes = with_frame_meta(
         with_timestamp(extract_frames(batch_lines, with_order=False))
     )
-    batch = decode_wide(bframes, catalog, downcast=False, strategy="long")
+    batch = decode_wide(bframes, catalog, downcast=False)
     keys = ["timestamp"]
     j = got.select("timestamp",
                    F.col("SB__W__VAL").alias("g_val"),

@@ -12,17 +12,14 @@ Two output shapes:
   intermediate "tall" table built at ``lib/canparser.py:106-111,159-169``),
   via a single generated CASE producing ``array<struct>`` + ``explode``.
 * :func:`decode_wide` — the pivoted wide table (``lib/canparser.py:222-239``)
-  computed **directly** as one hash aggregate of conditional ``avg`` s per
-  wide column. This replaces the reference's groupby-mean + unstack (A1+A2)
-  with a single shuffle and map-side partial aggregation — the plan you want
-  at 100 TB (no explode blow-up, no second pivot pass).
+  computed as a per-frame projection: each matched frame decodes directly
+  to its wide row, and the A1 same-µs mean runs as a ``groupBy`` only when
+  a thin eager pass finds duplicate timestamps.
 """
 
 from __future__ import annotations
 
-import warnings
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,25 +45,31 @@ def with_timestamp(frames: DataFrame, offset_seconds: float = 0.0) -> DataFrame:
     return frames.withColumn("timestamp", ts)
 
 
-def crop_to_bounds(frames: DataFrame) -> DataFrame:
-    """P4: keep rows between the first and last timestamp *in file order*
-    (``lib/canparser.py:207-212`` — first/last are trusted, intermediates
-    may be corrupt). Implemented as a broadcast of the 1-row bounds so the
-    plan stays lazy and scales: one cheap agg pass + a map-side filter.
-    The order key includes the (file, block-offset) metadata keys from
+def file_order_bounds(frames: DataFrame) -> DataFrame:
+    """P4 bounds as one row ``(first_ts, last_ts)``: the timestamps of the
+    first and last frame *in file order* (``lib/canparser.py:207-212`` —
+    first/last are trusted, intermediates may be corrupt). The order key
+    includes the (file, block-offset) metadata keys from
     ``extract_frames`` — required once the corpus spans multiple splits,
     where bare ``monotonically_increasing_id`` is not file-ordered."""
     from solarboat_data_pipeline_spark.sources.candump import ORDER_COLS
 
     order = F.struct(*[c for c in ORDER_COLS if c in frames.columns])
-    bounds = frames.agg(
-        F.min_by("timestamp", order).alias("_first_ts"),
-        F.max_by("timestamp", order).alias("_last_ts"),
+    return frames.agg(
+        F.min_by("timestamp", order).alias("first_ts"),
+        F.max_by("timestamp", order).alias("last_ts"),
     )
+
+
+def crop_to_bounds(frames: DataFrame) -> DataFrame:
+    """P4: keep rows between the first and last timestamp in file order
+    (:func:`file_order_bounds`). Implemented as a broadcast of the 1-row
+    bounds so the plan stays lazy and scales: one cheap agg pass + a
+    map-side filter."""
     return (
-        frames.crossJoin(F.broadcast(bounds))
-        .where(F.col("timestamp").between(F.col("_first_ts"), F.col("_last_ts")))
-        .drop("_first_ts", "_last_ts")
+        frames.crossJoin(F.broadcast(file_order_bounds(frames)))
+        .where(F.col("timestamp").between(F.col("first_ts"), F.col("last_ts")))
+        .drop("first_ts", "last_ts")
     )
 
 
@@ -92,14 +95,6 @@ def with_frame_meta(frames: DataFrame, mab20_workaround: bool = False) -> DataFr
             }
         )
     return df.withColumn("payload_len", (F.length("payload_hex") / 2).cast("int"))
-
-
-def _topic_condition(module_sig: int, topic_id: int, size: int) -> Column:
-    return (
-        (F.col("signature") == module_sig)
-        & (F.col("topic_id") == topic_id)
-        & (F.col("payload_len") == size)
-    )
 
 
 def decode_long(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
@@ -138,8 +133,7 @@ def decode_long(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
 # above this many wide columns, the pivot runs as ONE collect_list-to-map
 # aggregate + per-column map extraction instead of n_cols aggregate
 # functions: measured on 2M lines × 280 columns, agg-pivot 53k lines/s vs
-# map-pivot 90k (the fused decode_wide drops to 43k at that width — its
-# n_cols conditional aggregates are evaluated for every input row)
+# map-pivot 90k
 WIDE_PIVOT_MAX_AGG_COLS = 32
 
 
@@ -170,6 +164,28 @@ def decode_indexed(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
         "timestamp",
         F.col("f.idx").alias("idx"),
         _decode_field(F.col("__w"), F.col("f")).alias("value"),
+    )
+
+
+def _payload_words(catalog: CanCatalog) -> Column:
+    """The hex payload parsed ONCE per frame into big-endian-text 4-byte
+    words (zero right-padding is harmless: the size guard keeps every
+    field inside the real payload) — the per-field decode is then pure
+    long arithmetic instead of two string F.conv parses per signal row
+    (same-session A/B at 6 M lines / 187 columns: best pass 7.4 → 6.3 s,
+    medians within noise — the explode + pivot shuffle dominate this
+    stage; the word form also keeps the explode payload fixed-width).
+    The word count comes from the catalog's LARGEST topic, so payloads
+    beyond classic CAN's 8 bytes (CAN FD, synthetic frames) decode at any
+    offset the catalog can declare — the packed layout guarantees every
+    field ends at or before the topic size."""
+    n_words = max(2, -(-max(t.size for _, t in catalog.iter_topics()) // 4))
+    ph = F.rpad(F.col("payload_hex"), 8 * n_words, "0")
+    return F.array(
+        *[
+            F.conv(ph.substr(8 * w + 1, 8), 16, 10).cast("long")
+            for w in range(n_words)
+        ]
     )
 
 
@@ -208,28 +224,9 @@ def _matched_frames(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
         F.create_map(*entries),
         (F.col("signature") * 4096 + F.col("topic_id")).cast("int"),
     )
-    # the hex payload is parsed ONCE per frame into big-endian-text
-    # 4-byte words (zero right-padding is harmless: the size guard keeps
-    # every field inside the real payload) — the per-field decode is then
-    # pure long arithmetic instead of two string F.conv parses per signal
-    # row (same-session A/B at 6 M lines / 187 columns: best pass
-    # 7.4 → 6.3 s, medians within noise — the explode + pivot shuffle
-    # dominate this stage; the word form also keeps the explode payload
-    # fixed-width). The word count comes from the catalog's LARGEST
-    # topic, so payloads beyond classic CAN's 8 bytes (CAN FD, synthetic
-    # frames) decode at any offset the catalog can declare — the packed
-    # layout guarantees every field ends at or before the topic size.
-    n_words = max(2, -(-max(t.size for _, t in catalog.iter_topics()) // 4))
-    ph = F.rpad(F.col("payload_hex"), 8 * n_words, "0")
-    words = F.array(
-        *[
-            F.conv(ph.substr(8 * w + 1, 8), 16, 10).cast("long")
-            for w in range(n_words)
-        ]
-    )
     return frames.select(
         "timestamp",
-        words.alias("__w"),
+        _payload_words(catalog).alias("__w"),
         spec.alias("_spec"),
     ).where(F.col("_spec").isNotNull() & (F.col("payload_len") == F.col("_spec.size")))
 
@@ -277,17 +274,10 @@ def _decode_field(words: Column, f: Column) -> Column:
     return raw.cast("double") * f["scale"]
 
 
-def _byte_at_static(words: Column, off: int) -> Column:
-    """:func:`_byte_at` with a LITERAL offset — the word index and
-    within-word shift resolve at plan time, so the byte read is one
-    ``element_at`` + literal shift + mask instead of a 4-arm CASE."""
-    w = F.element_at(words, off // 4 + 1)
-    shift = (3 - off % 4) * 8
-    return (F.shiftright(w, shift) if shift else w).bitwiseAND(255)
-
-
 def _byte_at_static_sql(words_col: str, off: int) -> str:
-    """:func:`_byte_at_static` as SQL text (same AST after parsing)."""
+    """:func:`_byte_at` with a LITERAL offset, as SQL text — the word
+    index and within-word shift resolve at plan time, so the byte read is
+    one ``element_at`` + literal shift + mask instead of a 4-arm CASE."""
     w = f"element_at({words_col}, {off // 4 + 1})"
     shift = (3 - off % 4) * 8
     inner = f"shiftright({w}, {shift})" if shift else w
@@ -297,7 +287,11 @@ def _byte_at_static_sql(words_col: str, off: int) -> str:
 def _decode_field_static_sql(
     words_col: str, off: int, bit: int, width: int, scale: float
 ) -> str:
-    """:func:`_decode_field_static` as SQL text. Why text: a 187-column
+    """:func:`_decode_field` with LITERAL field geometry, as SQL text:
+    the width/offset dispatch happens in Python at plan time, emitting
+    just the 2-3 arithmetic ops the field actually needs (same semantics
+    — ctypes ``LittleEndianStructure`` access, LE u16 fuse, LSB-run
+    bitfields, scale folded in). Why text: a 187-column
     catalog's projection built through the Column API costs ~2,000 py4j
     round trips ≈ 8-10 s of driver time PER plan build (measured on the
     6 M-line bench row — more than the executed scan itself); the same
@@ -316,168 +310,8 @@ def _decode_field_static_sql(
     return f"CAST({raw} AS DOUBLE) * {scale!r}D"
 
 
-def _decode_field_static(
-    words: Column, off: int, bit: int, width: int, scale: float
-) -> Column:
-    """:func:`_decode_field` with LITERAL field geometry: the
-    width/offset dispatch happens in Python at plan time, emitting just
-    the 2-3 arithmetic ops the field actually needs (same semantics —
-    ctypes ``LittleEndianStructure`` access, LE u16 fuse, LSB-run
-    bitfields, scale folded in)."""
-    lo = _byte_at_static(words, off)
-    if width == 16:
-        raw = lo + _byte_at_static(words, off + 1) * 256
-    elif width == 8:
-        raw = lo
-    else:  # LSB-run bitfield: lo >= 0, so shiftright == floor-div by 2^bit
-        raw = F.shiftright(lo, bit).bitwiseAND(1)
-    return raw.cast("double") * F.lit(scale)
-
-
-# driver-side cap on duplicate timestamps the projection strategy folds
-# into scan-filter literals (same plan-cost ceiling rationale as
-# similarity._ISIN_PUSHDOWN_MAX - a Catalyst literal list past ~10k
-# nodes costs more than it saves); a corpus denser in same-us
-# collisions than this falls back to the shuffle-based long strategy
-_PROJECT_DUP_MAX = 10_000
-
-
-class ProjectDuplicateOverflow(ValueError):
-    """A same-µs-heavy corpus exceeded ``_PROJECT_DUP_MAX`` duplicate
-    timestamps — the projection strategy cannot fold the duplicate set
-    into scan-filter literals. ``decode_wide(strategy="auto")`` catches
-    this and degrades to the shuffle-based long path (an unattended batch
-    job must not die hours in on a data-shape property, VERDICT r9 #2);
-    an EXPLICIT ``strategy="project"`` still surfaces it."""
-
-
-def decode_wide_project(
-    frames: DataFrame,
-    catalog: CanCatalog,
-    downcast: bool = True,
-    dup_ts: list | None = None,
-) -> DataFrame:
-    """A2 wide decode as a PURE PER-FRAME PROJECTION — the scale path for
-    corpora where same-µs duplicate frames are rare or absent (measured
-    ZERO in the reference-shaped 6M/78M-line replays; the reference's own
-    groupby-mean meets duplicates only on pathological logs).
-
-    Every other strategy pays for A1 same-µs merging on every row: the
-    ``long`` path shuffles ~3 signal rows per frame into a per-timestamp
-    ``collect_list``, ``fused`` ships 187 partial-avg buffers per group
-    through the exchange. Here each matched frame decodes DIRECTLY to its
-    wide row — 187 statically-specialized guarded expressions
-    (:func:`_decode_field_static`; no spec-struct materialization, no
-    explode, no wide shuffle) — and A1 only runs where it is needed: one
-    THIN pass counts duplicate timestamps (column-pruned to the ts field,
-    shuffling 8-byte rows), the usually-empty duplicate set folds into
-    scan-filter literals, and only those rows take an avg detour. The dup
-    check makes construction EAGER (two jobs at plan time), and the
-    duplicate list is capped at ``_PROJECT_DUP_MAX`` — beyond it (or on
-    any same-µs-heavy corpus) use ``strategy="long"``. A caller that
-    already knows the duplicate timestamps (``pipeline.parse_stage``
-    derives them inside its crop-bounds pass for free) passes them as
-    ``dup_ts`` and no extra pass runs.
-
-    Reference parity: ``lib/canparser.py:222-239`` (groupby-mean +
-    unstack, here split into identity for unique ts + mean for dups) with
-    the same unknown-frame / wrong-length drops (:func:`_matched_frames`
-    semantics, re-expressed as an In + size-map filter)."""
-    cols = catalog.wide_columns()
-    topics = list(catalog.iter_topics())
-    if not topics:
-        raise ValueError("empty catalog")
-    n_words = max(2, -(-max(t.size for _, t in topics) // 4))
-    ph = F.rpad(F.col("payload_hex"), 8 * n_words, "0")
-    words = F.array(
-        *[
-            F.conv(ph.substr(8 * w + 1, 8), 16, 10).cast("long")
-            for w in range(n_words)
-        ]
-    )
-    key = (F.col("signature").cast("long") * 4096 + F.col("topic_id"))
-    keys, size_entries = [], []
-    for mod, top in topics:
-        k = mod.signature * 4096 + top.topic_id
-        keys.append(k)
-        size_entries += [F.lit(k), F.lit(top.size)]
-    base = frames.select(
-        "timestamp",
-        key.alias("__k"),
-        F.col("payload_len").alias("__len"),
-        words.alias("__w"),
-    ).where(
-        F.col("__k").isin(keys)
-        & (
-            F.col("__len")
-            == F.element_at(F.create_map(*size_entries), F.col("__k"))
-        )
-    )
-    idx_of = {c: i for i, c in enumerate(cols)}
-    # SQL-text projection: one parsed string per wide column instead of
-    # ~10 py4j Column calls per column — see _decode_field_static_sql
-    exprs: list[str | None] = [None] * len(cols)
-    for mod, top in topics:
-        k = mod.signature * 4096 + top.topic_id
-        for s in top.signals:
-            name = SEPARATOR.join([mod.name, top.name, s.name])
-            decode = _decode_field_static_sql(
-                "__w", s.byte_offset, s.bit_offset, s.bit_width, s.scale
-            )
-            exprs[idx_of[name]] = f"CASE WHEN __k = {k} THEN {decode} END"
-    if dup_ts is None:
-        # thin duplicate-timestamp pass: ts-only (the scan prunes to the
-        # timestamp group), 8-byte shuffle rows, collected because the
-        # result is (nearly always) empty and folds into scan filters
-        dup_rows = (
-            frames.groupBy("timestamp")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .select("timestamp")
-            .limit(_PROJECT_DUP_MAX + 1)
-            .collect()
-        )
-        if len(dup_rows) > _PROJECT_DUP_MAX:
-            raise ProjectDuplicateOverflow(
-                f"decode_wide_project: more than {_PROJECT_DUP_MAX}"
-                " duplicate timestamps — this corpus is same-us-heavy;"
-                " use strategy='long'"
-            )
-        dup_ts = [r["timestamp"] for r in dup_rows]
-    def out_col(e: str, c: str):
-        # CAST(CASE.. AS FLOAT) == the previous two-projection
-        # CASE-then-cast form (same double narrowed once, identical)
-        return F.expr(
-            f"CAST({e} AS FLOAT) AS `{c}`" if downcast else f"{e} AS `{c}`"
-        )
-
-    if not dup_ts:
-        return base.select(
-            "timestamp", *[out_col(e, c) for e, c in zip(exprs, cols)]
-        )
-    wide = base.select(
-        "timestamp", *[F.expr(f"{e} AS `{c}`") for e, c in zip(exprs, cols)]
-    )
-    uniq = wide.where(~F.col("timestamp").isin(dup_ts)).select(
-        "timestamp",
-        *[
-            F.expr(f"CAST(`{c}` AS FLOAT) AS `{c}`") if downcast else F.col(c)
-            for c in cols
-        ],
-    )
-    merged = (
-        wide.where(F.col("timestamp").isin(dup_ts))
-        .groupBy("timestamp")
-        .agg(*[
-            (F.avg(c).cast("float") if downcast else F.avg(c)).alias(c)
-            for c in cols
-        ])
-    )
-    return uniq.unionByName(merged)
-
-
 # a CAN payload is at most 8 bytes, so a topic decodes to at most 8 fused
-# fields — the frame_map strategy decodes all slots with fixed expressions
+# fields — the streaming wide decode fills all slots with fixed expressions
 MAX_TOPIC_FIELDS = 8
 
 
@@ -487,8 +321,7 @@ def _decode_frame_entries(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     fixed generic expression (null-idx slots filtered out). The slot
     count is the CATALOG's widest topic (≥ the classic-CAN 8 so existing
     plans are unchanged) — pinned at 8, a >8-byte CAN FD topic's tail
-    fields would silently null on this strategy while fused/long decode
-    them (the strategies must stay cell-for-cell equivalent)."""
+    fields would silently null here while the batch decode reads them."""
     matched = _matched_frames(frames, catalog)
     n_slots = max(
         MAX_TOPIC_FIELDS,
@@ -585,130 +418,91 @@ def pivot_wide(
 
 
 def decode_wide(
-    frames: DataFrame,
-    catalog: CanCatalog,
-    downcast: bool = True,
-    strategy: str = "auto",
+    frames: DataFrame, catalog: CanCatalog, downcast: bool = True
 ) -> DataFrame:
-    """Decode + pivot to the wide table.
+    """A1+A2 wide decode (``lib/canparser.py:222-239``, groupby-mean +
+    unstack) as a per-frame projection: each frame matching a catalog
+    topic decodes directly to its wide row — statically specialized
+    expressions per column (:func:`_decode_field_static_sql`), no
+    explode. Unknown frames and wrong-length payloads drop, as in
+    :func:`decode_long`.
 
-    ``strategy="fused"``: one hash aggregate of conditional means — a
-    single shuffle, no row explosion; fastest for narrow catalogs but its
-    n_cols aggregates are evaluated for EVERY input row, so it degrades as
-    the catalog widens (43k lines/s at 280 columns vs 90k for the long
-    path on the 2M-line bench). ``"long"``: ``decode_long`` →
-    map-strategy ``pivot_wide``. ``"auto"`` picks by catalog width.
+    Construction runs one EAGER thin job over the matched frames
+    (timestamp only, 8-byte shuffle rows) that counts duplicate
+    timestamps. Only when it finds one does the plan merge same-µs
+    frames with a ``groupBy(timestamp)`` mean over the wide rows; a
+    duplicate-free corpus (every measured replay) stays a pure
+    projection with no wide shuffle. Batch only — for a
+    stream use ``streaming.stream_decode_wide``. ``downcast=True`` casts
+    value columns to float, the faithful superset of the reference's
+    float16 (``lib/canparser.py:234``, P17)."""
+    return _decode_wide(frames, catalog, downcast)[0]
 
-    All strategies are equivalent (same-µs duplicate frames average per
-    signal, A1). ``"frame_map"`` is the zero-shuffle wide path: each frame
-    decodes to its entry map in place (≤8 fixed codegen expressions, no
-    explode), and only timestamps that actually hold MULTIPLE frames —
-    found by one thin count pass, typically a broadcast-empty set — take
-    a merge detour; everything else never shuffles. It reads the frames
-    twice, so pair it with ``parse_stage(crop_strategy="cached")`` (or any
-    materialized frame source). ``downcast=True`` casts value columns to
-    float, the faithful superset of the reference's float16
-    (``lib/canparser.py:234``, P17)."""
-    if strategy not in ("auto", "fused", "long", "frame_map", "project"):
-        raise ValueError("strategy must be auto|fused|long|frame_map|project")
-    cols = catalog.wide_columns()
-    if strategy == "project" and frames.isStreaming:
+
+def _decode_wide(
+    frames: DataFrame, catalog: CanCatalog, downcast: bool
+) -> tuple[DataFrame, Row]:
+    """:func:`decode_wide` plus its eager stats row: ``first_ts`` and
+    ``last_ts`` (the returned table's exact timestamp min/max, ``None``
+    when empty) and ``dup_n`` (timestamps holding more than one matched
+    frame)."""
+    if frames.isStreaming:
         raise ValueError(
-            "strategy='project' is batch-only: its duplicate-timestamp"
-            " check collects eagerly, which a streaming source cannot do"
-            " — use the streaming decode paths (decode_long) or 'fused'"
+            "decode_wide is batch-only: its duplicate-timestamp count runs"
+            " eagerly — decode a stream with streaming.stream_decode_wide"
         )
-    if strategy == "auto" and not frames.isStreaming and (
-        len(cols) > WIDE_PIVOT_MAX_AGG_COLS
-    ):
-        # round 9: wide batch catalogs decode as per-frame projections —
-        # zero wide shuffle, A1 merging only where duplicate timestamps
-        # exist (measured 9.3 s vs long's 11.7 s on the 6M/187-column
-        # fixture; parse_stage's fused bounds+dup pass is faster still).
-        # Streaming frames keep the shuffle-based paths (the dup check
-        # cannot run eagerly on an unbounded source). A same-µs-heavy
-        # corpus (> _PROJECT_DUP_MAX duplicate timestamps) DEGRADES to
-        # the long path instead of raising — auto picked project, so
-        # auto owns the fallback (VERDICT r9 #2); explicit
-        # strategy="project" below still raises.
-        try:
-            return decode_wide_project(frames, catalog, downcast=downcast)
-        except ProjectDuplicateOverflow as exc:
-            warnings.warn(
-                f"decode_wide(auto): {exc}; falling back to the"
-                " shuffle-based long strategy",
-                stacklevel=2,
-            )
-            strategy = "long"
-    if strategy == "project":
-        return decode_wide_project(frames, catalog, downcast=downcast)
-    if strategy == "frame_map":
-        per_frame = _decode_frame_entries(frames, catalog)
-        # thin pass: only (timestamp) is read — Catalyst prunes the decode
-        dups = (
-            per_frame.groupBy("timestamp")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .select("timestamp")
+    cols = catalog.wide_columns()
+    topics = list(catalog.iter_topics())
+    if not topics:
+        raise ValueError("empty catalog")
+    key = (F.col("signature").cast("long") * 4096 + F.col("topic_id"))
+    keys, size_entries = [], []
+    for mod, top in topics:
+        k = mod.signature * 4096 + top.topic_id
+        keys.append(k)
+        size_entries += [F.lit(k), F.lit(top.size)]
+    base = frames.select(
+        "timestamp",
+        key.alias("__k"),
+        F.col("payload_len").alias("__len"),
+        _payload_words(catalog).alias("__w"),
+    ).where(
+        F.col("__k").isin(keys)
+        & (
+            F.col("__len")
+            == F.element_at(F.create_map(*size_entries), F.col("__k"))
         )
-        uniq = per_frame.join(F.broadcast(dups), "timestamp", "anti").select(
-            "timestamp", F.map_from_entries("_sv").alias("_m")
+    )
+    # the scan prunes to the timestamp and the match keys
+    stats = (
+        base.groupBy("timestamp")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(
+            F.min("timestamp").alias("first_ts"),
+            F.max("timestamp").alias("last_ts"),
+            F.count(F.when(F.col("__n") > 1, 1)).alias("dup_n"),
         )
-        dup_g = (
-            per_frame.join(F.broadcast(dups), "timestamp", "semi")
-            .select("timestamp", F.explode("_sv").alias("e"))
-            .groupBy("timestamp")
-            .agg(
-                F.collect_list(
-                    F.struct(
-                        F.col("e.idx").alias("idx"),
-                        F.col("e.value").alias("value"),
-                    )
-                ).alias("_sv")
-            )
-        )
-        m = uniq.unionByName(
-            dup_g.select("timestamp", _merge_entries_mean(F.col("_sv")).alias("_m"))
-        )
-        return _extract_wide_cols(m, cols, downcast)
-    if strategy == "long" or (
-        strategy == "auto" and len(cols) > WIDE_PIVOT_MAX_AGG_COLS
-    ):
-        # index-keyed long path, ONE shuffle: the codegen'd explode decode
-        # emits thin (ts, idx, value) rows; a single collect_list groups a
-        # timestamp's few signals, and the A1 mean over the rare same-µs
-        # same-signal duplicates is computed in the projection with
-        # higher-order functions over the tiny per-row array (≈ signals
-        # per frame elements) — no second 47M-row shuffle, no n_cols
-        # aggregate fan-out
-        g = (
-            decode_indexed(frames, catalog)
-            .groupBy("timestamp")
-            .agg(F.collect_list(F.struct("idx", "value")).alias("_sv"))
-        )
-        m = g.select(
-            "timestamp", _merge_entries_mean(F.col("_sv")).alias("_m")
-        )
-        return _extract_wide_cols(m, cols, downcast)
-    aggs = []
-    for mod, top in catalog.iter_topics():
-        cond = _topic_condition(mod.signature, top.topic_id, top.size)
+        .first()
+    )
+    idx_of = {c: i for i, c in enumerate(cols)}
+    # SQL-text projection: one parsed string per wide column instead of
+    # ~10 py4j Column calls per column — see _decode_field_static_sql
+    exprs: list[str | None] = [None] * len(cols)
+    for mod, top in topics:
+        k = mod.signature * 4096 + top.topic_id
         for s in top.signals:
-            colname = SEPARATOR.join([mod.name, top.name, s.name])
-            expr = F.avg(F.when(cond, s.decode(F.col("payload_hex"))))
-            if downcast:
-                expr = expr.cast("float")
-            aggs.append(expr.alias(colname))
-    # frames that match no topic contribute only null aggregates; the
-    # reference drops them entirely, so keep only timestamps with ≥1 match
-    match_any = F.max(
-        F.coalesce(
-            *[
-                F.when(_topic_condition(m.signature, t.topic_id, t.size), F.lit(1))
-                for m, t in catalog.iter_topics()
-            ],
-            F.lit(0),
-        )
-    ).alias("_matched")
-    out = frames.groupBy("timestamp").agg(*aggs, match_any)
-    return out.where(F.col("_matched") == 1).drop("_matched")
+            name = SEPARATOR.join([mod.name, top.name, s.name])
+            decode = _decode_field_static_sql(
+                "__w", s.byte_offset, s.bit_offset, s.bit_width, s.scale
+            )
+            exprs[idx_of[name]] = f"CASE WHEN __k = {k} THEN {decode} END"
+    if stats["dup_n"]:
+        # the mean of a single value is that value, so unique timestamps
+        # come out of the merge unchanged
+        exprs = [f"avg({e})" for e in exprs]
+    if downcast:
+        exprs = [f"CAST({e} AS FLOAT)" for e in exprs]
+    out = [F.expr(f"{e} AS `{c}`") for e, c in zip(exprs, cols)]
+    if stats["dup_n"]:
+        return base.groupBy("timestamp").agg(*out), stats
+    return base.select("timestamp", *out), stats

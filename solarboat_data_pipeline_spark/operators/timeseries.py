@@ -453,10 +453,9 @@ def resample_interpolate(
 
     # per-partition grid bounds from ALL input buckets (a row whose cells
     # are all null still extends the dense spine, as in resample_mean).
-    # A caller that already measured the global bounds (pipeline.
-    # resample_stage's scale_buckets selection pays that thin job anyway)
-    # passes them as ``known_bounds=(min_ts, max_ts)`` and the plan loses
-    # this aggregate subtree — partition_cols=() only, where the bounds
+    # A caller that already measured the global bounds (e.g. the parse
+    # stage's stats_out) passes them as ``known_bounds=(min_ts, max_ts)``
+    # and the plan loses this aggregate subtree — partition_cols=() only, where the bounds
     # ARE one global row.
     if known_bounds is not None and not pc:
         lo_ts, hi_ts = known_bounds

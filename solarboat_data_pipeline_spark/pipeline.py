@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 from solarboat_data_pipeline_spark.catalog import CanCatalog
 from solarboat_data_pipeline_spark.functions.geo import derive_track
 from solarboat_data_pipeline_spark.operators.parse import (
-    crop_to_bounds,
-    decode_wide,
+    _decode_wide,
+    file_order_bounds,
     with_frame_meta,
     with_timestamp,
 )
@@ -45,13 +45,6 @@ from solarboat_data_pipeline_spark.operators.timeseries import (
 from solarboat_data_pipeline_spark.sources.candump import extract_frames, scan_candump
 from solarboat_data_pipeline_spark.sources.gpx import scan_gpx
 
-# grid rows below which the in-memory-safe resample forms (fused /
-# classic) win outright over the bucketed scale kernels — the 24 M-line
-# corpus's 100 ms grid is 2.4 M rows and measured 2.7× faster unbucketed
-# (SCALE.md); past this, resample_stage(scale_buckets=...) switches to
-# the structurally bounded group-width plan
-SCALE_GRID_INMEM_MAX = 100_000_000
-
 # r14 (guide §2.4): below this total output width the unify stages carry
 # the telemetry columns THROUGH the reindex/as-of window instead of
 # joining the projected columns back on the grid key — each stage drops
@@ -68,141 +61,41 @@ def parse_stage(
     catalog: CanCatalog,
     offset_seconds: float = 0.0,
     mab20_workaround: bool = False,
-    crop: bool = True,
     clean_outliers: bool = False,
-    crop_strategy: str = "two_pass",
     stats_out: dict | None = None,
 ) -> DataFrame:
     """E1 (``lib/canparser.py:263-364``): candump text → decoded wide table.
 
-    ``crop_strategy`` controls how the P4 bounds pass is paid for:
-    ``"two_pass"`` (default) recomputes the frame extraction for the
-    bounds aggregate and again for the data pass — nothing is
-    materialized. ``"cached"`` localCheckpoints the extracted frames so
-    the regex scan runs ONCE and every pass reads the materialized
-    frames (the reference's in-memory pandas flow is the single-machine
-    analogue, ``lib/canparser.py:289-299``). Measured guidance: since
-    the spec-map decode made re-extraction cheap, ``two_pass`` WINS at
-    corpus scale — 36 s vs 61 s steady-state on the 24 M-line /
-    187-column report corpus (the checkpoint's materialize+re-read
-    traffic costs more than two extra codegen regex passes). Prefer
-    ``cached`` only when the source itself is expensive to re-read
-    (remote object store without locality, pathological small files).
+    Construction runs two eager thin jobs. The first measures the P4 crop
+    bounds (:func:`operators.parse.file_order_bounds`), which fold into
+    literal filters. The second is :func:`operators.parse.decode_wide`'s
+    duplicate count over the cropped frames that match the catalog.
 
-    ``stats_out`` (r14, guide §2.4): pass a dict and the fast path
-    records its measured crop bounds (``first_ts``/``last_ts``
-    datetimes, ``dup_n``) — downstream stages that need the same bounds
-    (``resample_stage(known_bounds=...)``) can reuse the one fused
-    stats job instead of re-aggregating the decoded table. Left
-    untouched when the fast path does not run (``crop=False`` or a
-    non-``two_pass`` strategy)."""
-    if crop_strategy not in ("two_pass", "cached"):
-        raise ValueError("crop_strategy must be two_pass|cached")
+    ``stats_out``: pass a dict and it receives that second job's
+    ``first_ts``/``last_ts`` — the returned table's exact timestamp
+    min/max (``None`` for an empty table) — and ``dup_n``, the number of
+    timestamps holding more than one matched frame. Downstream stages
+    reuse the bounds (``resample_stage(known_bounds=...)``) instead of
+    re-aggregating the table. Left unfilled with ``clean_outliers=True``,
+    which can drop edge rows."""
     frames = extract_frames(scan_candump(spark, path))
     frames = with_timestamp(frames, offset_seconds=offset_seconds)
-    from solarboat_data_pipeline_spark.operators.parse import (
-        _PROJECT_DUP_MAX,
-        WIDE_PIVOT_MAX_AGG_COLS,
-        decode_wide_project,
-    )
-
-    dup_overflow = False  # fused stats pass already measured > cap dups
-    if crop and crop_strategy == "two_pass":
-        # ROUND-9 FAST PATH (r14: for EVERY catalog width, not just wide
-        # ones): ONE fused stats job over the raw frames computes the P4
-        # crop bounds (first/last ts in file order, exactly
-        # crop_to_bounds' contract) AND the same-µs duplicate count in a
-        # single thin shuffle — then the bounds fold into literal
-        # filters (the main pass loses its bounds subjob) and the wide
-        # table is a pure per-frame projection (decode_wide_project).
-        # Duplicate-free corpora (every replay measured) run TWO total
-        # source scans with zero wide shuffles; when duplicates exist,
-        # decode_wide_project's own guarded pass enumerates them (a
-        # third thin scan — rare by construction). Measured on the
-        # 6M-line/187-column fixture: 7.4 s vs the long path's 11.7 s.
-        # r14 (guide §2.4, remove shuffles outright): the narrow-catalog
-        # branch below paid crop_to_bounds' broadcast-subquery bounds
-        # scan PLUS decode_wide's full-corpus groupBy(timestamp) hash
-        # aggregate; the projection form decodes the same frames with
-        # ZERO exchanges (pipeline_can_e2e's parse: 2 Exchange → 1 thin
-        # stats Exchange, measured in plans/r14). Construction runs the
-        # stats job eagerly. A corpus denser than _PROJECT_DUP_MAX
-        # same-µs collisions falls through to the shuffle-based
-        # strategies below.
-        from solarboat_data_pipeline_spark.sources.candump import ORDER_COLS
-
-        order = F.struct(*[c for c in ORDER_COLS if c in frames.columns])
-        g = frames.groupBy("timestamp").agg(
-            F.min(order).alias("__o_min"),
-            F.max(order).alias("__o_max"),
-            F.count(F.lit(1)).alias("__n"),
+    bounds = file_order_bounds(frames).first()
+    # an empty corpus has null bounds, and the null filter keeps nothing
+    frames = frames.where(
+        F.col("timestamp").between(
+            F.lit(bounds["first_ts"]), F.lit(bounds["last_ts"])
         )
-        stats = g.agg(
-            F.min_by("timestamp", "__o_min").alias("first_ts"),
-            F.max_by("timestamp", "__o_max").alias("last_ts"),
-            F.sum(F.when(F.col("__n") > 1, 1).otherwise(0)).alias("dup_n"),
-        ).first()
-        dup_n = stats["dup_n"] or 0
-        if stats_out is not None:
-            stats_out.update(
-                first_ts=stats["first_ts"], last_ts=stats["last_ts"],
-                dup_n=dup_n,
-            )
-        if dup_n <= _PROJECT_DUP_MAX:
-            if stats["first_ts"] is None:  # empty corpus
-                cropped = frames.where(F.lit(False))
-            else:
-                cropped = frames.where(
-                    F.col("timestamp").between(
-                        F.lit(stats["first_ts"]), F.lit(stats["last_ts"])
-                    )
-                )
-            cropped = with_frame_meta(
-                cropped, mab20_workaround=mab20_workaround
-            )
-            # dup_n == 0 (the measured norm) skips enumeration entirely;
-            # otherwise decode_wide_project runs its own guarded dup pass
-            # on the cropped frames (one definition of that query)
-            wide = decode_wide_project(
-                cropped, catalog, dup_ts=[] if dup_n == 0 else None
-            )
-            if clean_outliers:
-                wide = clean_timestamp_outliers(wide)
-            return wide
-        dup_overflow = True  # skip re-measuring via auto→project below
-        # the stats job already holds the P4 bounds — crop with literal
-        # filters instead of paying crop_to_bounds' second full-corpus
-        # bounds aggregate on this (already degraded) path
-        if stats["first_ts"] is None:
-            frames = frames.where(F.lit(False))
-        else:
-            frames = frames.where(
-                F.col("timestamp").between(
-                    F.lit(stats["first_ts"]), F.lit(stats["last_ts"])
-                )
-            )
-
-    cached = False
-    if crop and not dup_overflow:
-        if crop_strategy == "cached":
-            frames = frames.localCheckpoint(eager=False)
-            cached = True
-        frames = crop_to_bounds(frames)
+    )
     frames = with_frame_meta(frames, mab20_workaround=mab20_workaround)
-    # with materialized frames the zero-shuffle frame_map decode is free
-    # to pay its duplicate-detection pass; wide catalogs win ~2× from it
-    from solarboat_data_pipeline_spark.operators.parse import (
-        WIDE_PIVOT_MAX_AGG_COLS,
-    )
-
-    wide_strategy = (
-        "frame_map"
-        if cached and len(catalog.wide_columns()) > WIDE_PIVOT_MAX_AGG_COLS
-        else ("long" if dup_overflow else "auto")
-    )
-    wide = decode_wide(frames, catalog, strategy=wide_strategy)
+    wide, stats = _decode_wide(frames, catalog, downcast=True)
     if clean_outliers:
-        wide = clean_timestamp_outliers(wide)
+        return clean_timestamp_outliers(wide)
+    if stats_out is not None:
+        stats_out.update(
+            first_ts=stats["first_ts"], last_ts=stats["last_ts"],
+            dup_n=stats["dup_n"],
+        )
     return wide
 
 
@@ -211,123 +104,36 @@ def resample_stage(
     period_seconds: float,
     ts_col: str = "timestamp",
     max_gap_seconds: float = 60.0,
-    scale_buckets: int | None = None,
-    strategy: str = "auto",
-    fused_group_width: int | None = None,
     known_bounds: tuple | None = None,
 ) -> DataFrame:
     """E2 (``lib/resampler.py:59-101``): mean-downsample to a fixed period
     and gap-fill ≤ ``max_gap_seconds`` with bounded time interpolation
     (``limit = max(1, gap/period)`` samples, ``lib/resampler.py:63-66``).
 
-    ``strategy``: ``"fused"`` runs the single-kernel dense-grid form
+    Above ``WIDE_RESAMPLE_MAX_AGG_COLS`` value columns the stage runs the
+    single-kernel dense-grid form
     (:func:`operators.timeseries.resample_interpolate`: one sparse sort +
-    arithmetic gap generation — no dense-grid window sorts, no
-    intermediate wide materialization); ``"classic"`` composes
-    ``resample_mean`` + ``interpolate_time``; ``"auto"`` picks fused for
-    wide catalogs (> ``WIDE_RESAMPLE_MAX_AGG_COLS`` value columns, the
-    regime where the composed plan's dense-grid sorts dominate) and
-    classic for narrow frames. Cell-for-cell equivalence is locked by
-    ``tests/test_resample_interpolate.py``.
-
-    ``scale_buckets``: by default the gap-fill's window runs per-column
-    (fused) or globally (classic) — correct while one column's sparse
-    samples (fused) or the resampled grid (classic) fits one task's sort.
-    For the 100 TB shape (years of sub-second grid → 1e9+ grid rows) pass
-    a bucket count: the stage then MEASURES the grid with one thin
-    bounds job (ts column only — the scan prunes to it; the measured
-    bounds are reused by the chosen kernel's spine, so the job is paid
-    once, not re-derived downstream) and picks the cheapest scale-safe
-    plan. The bounds job executes ``wide``'s lineage eagerly — if that
-    lineage is an expensive unmaterialized pipeline (e.g. a full parse
-    stage), materialize it first or the measurement re-runs it (VERDICT r9 #7 — the always-bucketed form
-    was a 2.7× tax at in-memory sizes, 510 s vs 186 s at the 24 M /
-    100 ms corpus):
-
-    * grid ≤ ``SCALE_GRID_INMEM_MAX`` → the normal fused/classic
-      selection below (fastest, and at this size nothing can funnel a
-      task anyway);
-    * larger → the fused kernel with ``group_width = ceil(grid /
-      scale_buckets)``, whose windows partition by (column, grid group)
-      and whose spine/repivot are already two-level — no single-task
-      sort anywhere, same plan shape the 1e9-row grid needs.
-
-    ``strategy="bucketed"`` (with ``scale_buckets``) forces the round-5
-    bucketed kernel (``resample_mean`` + ``operators/scale.py``
-    interpolation) unconditionally — the explicit form the SCALE.md
-    equivalence evidence was recorded against.
+    arithmetic gap generation), the regime where the composed plan's
+    dense-grid sorts dominate; narrower frames compose ``resample_mean`` +
+    ``interpolate_time``. Cell-for-cell equivalence is locked by
+    ``tests/test_resample_interpolate.py``. Grids too large for one
+    task's sort take the bucketed kernels directly
+    (``resample_interpolate(group_width=...)``,
+    ``operators.scale.interpolate_time``).
 
     ``known_bounds`` (r14, guide §2.4): ``(lo, hi)`` datetimes equal to
-    ``wide``'s exact ``ts_col`` min/max — e.g. the parse stage's fused
-    stats bounds (``parse_stage(stats_out=...)``), whose crop filter
-    guarantees exactly that. Skips this stage's own bounds jobs (the
-    dense-spine aggregate; the scale-path grid measurement)."""
+    ``wide``'s exact ``ts_col`` min/max — e.g. ``parse_stage(stats_out=...)``
+    bounds. Skips this stage's own bounds job (the dense-spine
+    aggregate)."""
     limit = max(1, int(max_gap_seconds / period_seconds))
-    if strategy == "bucketed":
-        if scale_buckets is None:
-            raise ValueError("strategy='bucketed' requires scale_buckets")
-        from solarboat_data_pipeline_spark.operators import scale as _scale
-
-        res = resample_mean(wide, period_seconds, ts_col=ts_col, dense=True,
-                            known_bounds=known_bounds)
-        return _scale.interpolate_time(
-            res,
-            ts_col=ts_col,
-            limit=limit,
-            limit_area="inside",
-            num_buckets=scale_buckets,
-        )
-    if scale_buckets is not None:
-        if strategy != "auto":
-            raise ValueError(
-                "scale_buckets composes with strategy='auto' (measured"
-                " selection) or 'bucketed' (the explicit r5 kernel);"
-                f" got strategy={strategy!r}"
-            )
-        if known_bounds is None:
-            b = wide.agg(
-                F.min(ts_col).alias("__lo"), F.max(ts_col).alias("__hi")
-            ).first()
-            known_bounds = (b["__lo"], b["__hi"])
-        b = {"__lo": known_bounds[0], "__hi": known_bounds[1]}
-        if b["__lo"] is not None:
-            step_us = int(round(period_seconds * 1_000_000))
-            span_us = int(
-                (b["__hi"] - b["__lo"]).total_seconds() * 1_000_000
-            )
-            grid = span_us // step_us + 1
-            # the measured bounds ride along so the fused kernel drops
-            # its internal bounds-aggregate subtree — the thin job is
-            # paid ONCE, not three times (measure + kb + spine)
-            if grid > SCALE_GRID_INMEM_MAX:
-                return resample_interpolate(
-                    wide,
-                    period_seconds,
-                    ts_col=ts_col,
-                    limit=limit,
-                    limit_area="inside",
-                    group_width=max(1, -(-grid // scale_buckets)),
-                    known_bounds=known_bounds,
-                )
-        # small grid: fall through to the fastest in-memory-safe form
-    if strategy not in ("auto", "fused", "classic"):
-        raise ValueError("strategy must be auto|fused|classic|bucketed")
-    n_vals = len(wide.columns) - 1
-    use_fused = strategy == "fused" or (
-        strategy == "auto" and n_vals > WIDE_RESAMPLE_MAX_AGG_COLS
-    )
-    if use_fused:
-        # fused_group_width (grid buckets per window group, e.g. one
-        # day's worth) bounds the per-column sort structurally for
-        # 1e9-row-per-column grids; None = global per-column window.
+    if len(wide.columns) - 1 > WIDE_RESAMPLE_MAX_AGG_COLS:
         # A measured-empty bounds pair degrades to the kernel's own
         # aggregate (which yields the same empty grid) — the fused
         # kernel's known_bounds contract expects real instants.
         kb = known_bounds if (known_bounds and known_bounds[0] is not None) else None
         return resample_interpolate(
             wide, period_seconds, ts_col=ts_col, limit=limit,
-            limit_area="inside", group_width=fused_group_width,
-            known_bounds=kb,
+            limit_area="inside", known_bounds=kb,
         )
     res = resample_mean(wide, period_seconds, ts_col=ts_col, dense=True,
                         known_bounds=known_bounds)
@@ -463,9 +269,9 @@ def run_pipeline(
         mab20_workaround=mab20_workaround,
         stats_out=stats,
     )
-    # r14 (guide §2.4): the fused parse stats already measured the crop
-    # bounds — reuse them for the resample spine and the asfreq grid
-    # instead of re-aggregating the decoded table at each stage
+    # the parse stage already measured the decoded table's bounds — reuse
+    # them for the resample spine and the asfreq grid instead of
+    # re-aggregating the table at each stage
     kb = (stats["first_ts"], stats["last_ts"]) if "first_ts" in stats else None
     out = resample_stage(wide, period_seconds, known_bounds=kb)
     if forecast is not None:

@@ -71,18 +71,16 @@ def stream_decode_wide(
     watermark: str = "10 seconds",
     downcast: bool = True,
 ) -> DataFrame:
-    """A2 wide decode on a STREAM — the projection-shaped plan the batch
-    path gets from ``decode_wide_project``, made stream-safe
-    (VERDICT r9 #5; closes the round-9 envelope note "streaming wide
-    decode is shuffle-based").
+    """A2 wide decode on a STREAM — the stream-safe counterpart of the
+    batch per-frame projection ``operators.parse.decode_wide``
+    (VERDICT r9 #5).
 
-    Batch ``decode_wide_project`` folds the duplicate-timestamp set into
-    scan-filter literals via an EAGER pass — impossible on an unbounded
-    source. Here the per-frame decode stays a pure projection (the same
-    fixed-expression slot decode as the batch ``frame_map`` strategy:
-    no explode, no spec-struct materialization, no per-row Python) and
-    the A1 same-µs duplicate merge runs as a WATERMARK-BOUNDED streaming
-    aggregate keyed by timestamp:
+    Batch ``decode_wide`` counts duplicate timestamps in an EAGER pass
+    before it picks its plan — impossible on an unbounded source. Here
+    the per-frame decode stays a pure projection (a fixed-expression slot
+    decode per frame: no explode, no spec-struct materialization, no
+    per-row Python) and the A1 same-µs duplicate merge runs as a
+    WATERMARK-BOUNDED streaming aggregate keyed by timestamp:
 
     * per-key state is the frame's decoded ``(idx, value)`` entry list —
       ~tens of bytes per unique timestamp in the watermark span, NOT a
@@ -90,7 +88,7 @@ def stream_decode_wide(
       per key and evaluate 187 avg updates per input row);
     * duplicates merge through :func:`_merge_entries_mean`, whose
       no-duplicate fast path is the map identity — bit-exact parity with
-      the batch strategies (cell-for-cell, locked by
+      the batch decode (cell-for-cell, locked by
       ``tests/test_streaming.py``);
     * state retires as the watermark passes each timestamp (append
       mode), so memory is rate × span, independent of stream length.

@@ -87,32 +87,36 @@ def test_decode_long(frames, catalog):
     assert math.isclose(pumps["PUMP_B"]["value"], 1.0)  # 0x03 bit 1
 
 
-def test_decode_wide_matches_pivot(frames, catalog):
-    wide = decode_wide(frames, catalog, downcast=False, strategy="fused")
-    assert wide.count() == 7  # distinct matched timestamps
-    a = {r["timestamp"]: r for r in wide.collect()}
+def _assert_cells_equal(a_df, b_df, rel_tol=1e-12):
+    a = {r["timestamp"]: r for r in a_df.collect()}
+    b = {r["timestamp"]: r for r in b_df.collect()}
+    assert set(a_df.columns) == set(b_df.columns)
+    assert a.keys() == b.keys()
+    for ts in a:
+        for c in a_df.columns:
+            if c == "timestamp":
+                continue
+            va, vb = a[ts][c], b[ts][c]
+            assert (va is None) == (vb is None), (ts, c)
+            if va is not None:
+                assert math.isclose(va, vb, rel_tol=rel_tol), (ts, c)
 
-    # every pivot strategy must agree cell-for-cell with the fused decode
-    for alt in (
-        pivot_wide(decode_long(frames, catalog), catalog, strategy="agg"),
-        pivot_wide(decode_long(frames, catalog), catalog, strategy="map"),
-        decode_wide(frames, catalog, downcast=False, strategy="long"),
-        decode_wide(frames, catalog, downcast=False, strategy="frame_map"),
-        # the fixture has same-µs duplicates, so this also exercises the
-        # projection strategy's avg detour
-        decode_wide(frames, catalog, downcast=False, strategy="project"),
-    ):
-        assert set(wide.columns) == set(alt.columns)
-        b = {r["timestamp"]: r for r in alt.collect()}
-        assert a.keys() == b.keys()
-        for ts in a:
-            for c in wide.columns:
-                if c == "timestamp":
-                    continue
-                va, vb = a[ts][c], b[ts][c]
-                assert (va is None) == (vb is None), (ts, c)
-                if va is not None:
-                    assert math.isclose(va, vb, rel_tol=1e-12), (ts, c)
+
+def test_decode_wide_matches_pivot(frames, catalog):
+    # the widened catalog crosses WIDE_PIVOT_MAX_AGG_COLS, so both
+    # pivot_wide forms run; the fixture's same-µs duplicate pair takes
+    # decode_wide's merge
+    for cat in (catalog, _widened(MINI)):
+        wide = decode_wide(frames, cat, downcast=False)
+        assert wide.count() == 7  # distinct matched timestamps
+        for strategy in ("agg", "map"):
+            _assert_cells_equal(
+                wide, pivot_wide(decode_long(frames, cat), cat, strategy=strategy)
+            )
+    # PAD columns exist and are all-null (never match)
+    pads = [c for c in wide.columns if c.startswith("PAD__")]
+    assert len(pads) == 20 * 2  # sig byte + v{k} per topic
+    assert wide.where(F.coalesce(*pads).isNotNull()).count() == 0
 
 
 def test_same_microsecond_frames_average(frames, catalog):
@@ -184,12 +188,12 @@ def test_crop_bounds_multi_file_order(spark, tmp_path):
 
 def test_randomized_decode_parity_vs_python_reference(spark, tmp_path):
     """Seeded-random catalogs + payloads, decoded cell-for-cell three
-    ways: the index-keyed long path (word-arithmetic `_decode_field`),
-    the fused conditional-aggregate path (`CanSignal.decode` over the
-    hex string — an independent Spark expression), and a pure-Python
-    byte decoder implementing the ctypes LittleEndianStructure
-    semantics directly. Duplicate-timestamp frames exercise the A1
-    mean; wrong-length payloads and unknown signatures must drop."""
+    ways: the per-frame projection (`decode_wide`, literal field
+    geometry), the index-keyed long path pivoted (word-arithmetic
+    `_decode_field`), and a pure-Python byte decoder implementing the
+    ctypes LittleEndianStructure semantics directly. Duplicate-timestamp
+    frames exercise the A1 mean; wrong-length payloads and unknown
+    signatures must drop."""
     import random
 
     rng = random.Random(0xC0FFEE)
@@ -258,21 +262,23 @@ def test_randomized_decode_parity_vs_python_reference(spark, tmp_path):
         want[(ts_us, col)] = sum(vals) / len(vals)
     want_ts = {ts for ts, _ in want}
 
-    for strategy in ("long", "fused", "project"):
-        wide = decode_wide(frames, catalog, downcast=False, strategy=strategy)
+    for name, wide in (
+        ("decode_wide", decode_wide(frames, catalog, downcast=False)),
+        ("pivot_wide", pivot_wide(decode_long(frames, catalog), catalog)),
+    ):
         got = {}
         for r in wide.collect():
             ts_us = int(r["timestamp"].timestamp() * 1_000_000)
             for c in cols:
                 if r[c] is not None:
                     got[(ts_us, c)] = r[c]
-        assert set(got) == set(want), strategy
+        assert set(got) == set(want), name
         for k, v in want.items():
-            assert got[k] == pytest.approx(v, abs=1e-9), (strategy, k)
+            assert got[k] == pytest.approx(v, abs=1e-9), (name, k)
         # every rejected line produced no row at all
         got_ts = {int(r["timestamp"].timestamp() * 1_000_000)
                   for r in wide.collect()}
-        assert got_ts == want_ts, strategy
+        assert got_ts == want_ts, name
 
 
 def test_decode_handles_payloads_beyond_8_bytes(spark):
@@ -298,22 +304,32 @@ def test_decode_handles_payloads_beyond_8_bytes(spark):
         "timestamp timestamp, payload_hex string, signature int, "
         "topic_id int, payload_len int",
     )
-    # every strategy must decode the >8-byte tail identically (frame_map
-    # previously capped at 8 slots and silently nulled tail fields)
-    for strategy in ("fused", "long", "frame_map", "project"):
-        r = decode_wide(frames, cat, downcast=False, strategy=strategy).first()
+    # every wide form must decode the >8-byte tail identically (the
+    # streaming slot decode once capped at 8 slots and silently nulled
+    # tail fields; on a batch frame it runs as a plain aggregate)
+    from solarboat_data_pipeline_spark.streaming import stream_decode_wide
+
+    for name, wide in (
+        ("decode_wide", decode_wide(frames, cat, downcast=False)),
+        ("pivot_wide", pivot_wide(decode_long(frames, cat), cat)),
+        ("stream_decode_wide", stream_decode_wide(frames, cat, downcast=False)),
+    ):
+        r = wide.first()
         # tail16 at bytes 8-9 little-endian = 0x34 + 0x12*256
-        assert r["FD__W__tail16"] == float(0x34 + 0x12 * 256), strategy
+        assert r["FD__W__tail16"] == float(0x34 + 0x12 * 256), name
         # b8: bit 0 of byte 10 (0x05) = 1 ; last: byte 11 = 0xFE
-        assert r["FD__W__b8"] == 1.0, strategy
-        assert r["FD__W__last"] == 254.0, strategy
-        assert r["FD__W__p6"] == 7.0, strategy  # below the old boundary too
+        assert r["FD__W__b8"] == 1.0, name
+        assert r["FD__W__last"] == 254.0, name
+        assert r["FD__W__p6"] == 7.0, name  # below the old boundary too
+    # a duplicate-free input decodes as a pure projection: no aggregate
+    plan = decode_wide(frames, cat)._jdf.queryExecution().optimizedPlan()
+    assert "Aggregate" not in plan.toString(), plan.toString()
 
 
 def _widened(catalog_path):
     """The mini catalog widened past WIDE_PIVOT_MAX_AGG_COLS with
-    never-matching topics, so wide-catalog strategy selection triggers
-    on the small fixture."""
+    never-matching topics, so the wide side of pivot_wide's width switch
+    runs on the small fixture."""
     import json
 
     with open(catalog_path) as f:
@@ -329,112 +345,57 @@ def _widened(catalog_path):
     return CanCatalog.from_dict(d)
 
 
-def test_auto_picks_project_for_wide_batch(frames, catalog):
-    """Wide batch catalogs decode via the per-frame projection (zero
-    wide shuffle) and agree cell-for-cell with the long strategy —
-    including the fixture's same-µs duplicate pair; streaming frames
-    must never take the eager projection path."""
+def _colliding_frames(spark, tmp_path):
+    """A corpus where every timestamp holds two matched frames, its
+    path, and the long pivot of its decode."""
+    f = tmp_path / "collide.candump"
+    f.write_text("".join(
+        f"(17000000{i:02d}.500000) can0 021#fa{i:02x}04f600f600\n"
+        f"(17000000{i:02d}.500000) can0 021#fa{i + 1:02x}05f600f600\n"
+        for i in range(40)
+    ))
     cat = _widened(MINI)
-    a = {r["timestamp"]: r for r in
-         decode_wide(frames, cat, downcast=False, strategy="auto").collect()}
-    b = {r["timestamp"]: r for r in
-         decode_wide(frames, cat, downcast=False, strategy="long").collect()}
-    assert a.keys() == b.keys() and len(a) == 7
-    for ts in a:
-        for c in b[ts].asDict():
-            if c == "timestamp":
-                continue
-            va, vb = a[ts][c], b[ts][c]
-            assert (va is None) == (vb is None), (ts, c)
-            if va is not None:
-                assert math.isclose(va, vb, rel_tol=1e-12), (ts, c)
-    # all PAD columns exist and are all-null (never match)
-    pads = [c for c in b[ts].asDict() if c.startswith("PAD__")]
-    assert len(pads) == 20 * 2  # sig byte + v{k} per topic
-    # plan shape: the projection output has no aggregate for unique ts
-    dfa = decode_wide(frames, cat, downcast=False, strategy="project")
-    assert dfa.count() == 7
+    fr = with_frame_meta(
+        crop_to_bounds(with_timestamp(extract_frames(scan_candump(spark, str(f)))))
+    )
+    want = pivot_wide(decode_long(fr, cat), cat)
+    assert want.count() == 40
+    return str(f), cat, fr, want
 
 
-def test_auto_degrades_to_long_past_dup_cap(frames, catalog, monkeypatch):
-    """VERDICT r9 #2: a same-µs-heavy corpus (more duplicate timestamps
-    than _PROJECT_DUP_MAX) must NOT kill an unattended auto-strategy job
-    — auto falls back to the long path with a warning and stays
-    cell-identical; explicit strategy='project' still raises."""
-    import warnings as _warnings
-
-    from solarboat_data_pipeline_spark.operators import parse as parse_mod
-
-    cat = _widened(MINI)
-    # the fixture has one same-µs duplicate pair; cap 0 forces overflow
-    monkeypatch.setattr(parse_mod, "_PROJECT_DUP_MAX", 0)
-    with pytest.raises(parse_mod.ProjectDuplicateOverflow):
-        decode_wide(frames, cat, downcast=False, strategy="project").collect()
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        a = {r["timestamp"]: r for r in
-             decode_wide(frames, cat, downcast=False,
-                         strategy="auto").collect()}
-    assert any("falling back" in str(w.message) for w in caught)
-    b = {r["timestamp"]: r for r in
-         decode_wide(frames, cat, downcast=False, strategy="long").collect()}
-    assert a.keys() == b.keys() and len(a) == 7
-    for ts in a:
-        for c in b[ts].asDict():
-            if c == "timestamp":
-                continue
-            va, vb = a[ts][c], b[ts][c]
-            assert (va is None) == (vb is None), (ts, c)
-            if va is not None:
-                assert math.isclose(va, vb, rel_tol=1e-12), (ts, c)
+def test_auto_degrades_to_long_past_dup_cap(spark, tmp_path):
+    """Every timestamp collides, far more duplicates than the former
+    projection cap allowed: the same-µs merge has no size cap, so
+    decode_wide equals the long pivot with no fallback."""
+    _, cat, fr, want = _colliding_frames(spark, tmp_path)
+    _assert_cells_equal(decode_wide(fr, cat, downcast=False), want)
 
 
-def test_parse_stage_degrades_to_long_past_dup_cap(spark, monkeypatch):
-    """parse_stage's fused stats pass measures the duplicate count; past
-    the cap it must take the long strategy DIRECTLY (no second
-    dup-enumeration pass via auto→project) and still match classic."""
-    from solarboat_data_pipeline_spark.operators import parse as parse_mod
+def test_parse_stage_degrades_to_long_past_dup_cap(spark, tmp_path):
+    """parse_stage on the every-timestamp-collides corpus equals the
+    long pivot, and its measured stats count every timestamp as a
+    duplicate."""
     from solarboat_data_pipeline_spark.pipeline import parse_stage
 
-    cat = _widened(MINI)
-    monkeypatch.setattr(parse_mod, "_PROJECT_DUP_MAX", 0)
-    fast = parse_stage(spark, CORPUS, cat)
-    lines = scan_candump(spark, CORPUS)
-    fr = with_frame_meta(crop_to_bounds(with_timestamp(extract_frames(lines))))
-    classic = decode_wide(fr, cat, strategy="long")
-    a = {r["timestamp"]: r for r in fast.collect()}
-    b = {r["timestamp"]: r for r in classic.collect()}
-    assert a.keys() == b.keys() and len(a) == 7
-    for ts in a:
-        for c in b[ts].asDict():
-            if c == "timestamp":
-                continue
-            va, vb = a[ts][c], b[ts][c]
-            assert (va is None) == (vb is None), (ts, c)
-            if va is not None:
-                assert math.isclose(va, vb, rel_tol=1e-6), (ts, c)
+    path, cat, _, want = _colliding_frames(spark, tmp_path)
+    stats: dict = {}
+    _assert_cells_equal(
+        parse_stage(spark, path, cat, stats_out=stats), want, rel_tol=1e-6
+    )
+    assert stats["dup_n"] == 40
 
 
 def test_parse_stage_wide_fast_path_matches_long(spark):
-    """pipeline.parse_stage's fused bounds+dup fast path (wide catalog,
-    two_pass crop): same rows, same cells, same crop semantics as the
-    classic path — on the adversarial fixture with its out-of-range
-    timestamp and same-µs duplicate frames."""
+    """pipeline.parse_stage (eager crop bounds + projection decode, wide
+    catalog): same rows, same cells, same crop semantics as cropping
+    lazily and pivoting the long decode — on the adversarial fixture
+    with its out-of-range timestamp and same-µs duplicate frames."""
     from solarboat_data_pipeline_spark.pipeline import parse_stage
 
     cat = _widened(MINI)
     fast = parse_stage(spark, CORPUS, cat)
     lines = scan_candump(spark, CORPUS)
     fr = with_frame_meta(crop_to_bounds(with_timestamp(extract_frames(lines))))
-    classic = decode_wide(fr, cat, strategy="long")
-    a = {r["timestamp"]: r for r in fast.collect()}
-    b = {r["timestamp"]: r for r in classic.collect()}
-    assert a.keys() == b.keys() and len(a) == 7
-    for ts in a:
-        for c in b[ts].asDict():
-            if c == "timestamp":
-                continue
-            va, vb = a[ts][c], b[ts][c]
-            assert (va is None) == (vb is None), (ts, c)
-            if va is not None:
-                assert math.isclose(va, vb, rel_tol=1e-6), (ts, c)
+    classic = pivot_wide(decode_long(fr, cat), cat)
+    assert fast.count() == 7
+    _assert_cells_equal(fast, classic, rel_tol=1e-6)

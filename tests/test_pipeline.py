@@ -72,11 +72,26 @@ def _rows_equal(a, b, key="timestamp"):
                 assert va == vb, (k, c)
 
 
-def test_known_bounds_forms_match_measured(spark, catalog, forecast):
+# first frame in file order has an unknown signature, last one a wrong
+# payload length: the regex keeps both, the decode drops both
+EDGE_REJECTS = """\
+(1699999999.500000) can0 021#559f04f600f600
+(1700000000.100000) can0 008#fa03
+(1700000000.300000) can0 021#fa9f04f600f600
+(1700000000.300000) can0 021#faa104f600f600
+(1700000001.200000) can0 040#e60301
+(1700000002.400000) can0 008#fa05
+(1700000003.900000) can0 008#fa03ff
+"""
+
+
+def test_known_bounds_forms_match_measured(spark, catalog, forecast, tmp_path):
     """r14: every known_bounds fast path must be cell-identical to the
     measured form — the parse stats bounds fed through resample_stage,
     the grid bounds fed through unify_forecast_stage/asfreq, and the
-    driver-side time_spine row count."""
+    driver-side time_spine row count. Also on a corpus whose first and
+    last frames the decode rejects, where the crop bounds are not the
+    decoded table's bounds."""
     from solarboat_data_pipeline_spark.operators.timeseries import (
         asfreq,
         resample_mean,
@@ -84,44 +99,47 @@ def test_known_bounds_forms_match_measured(spark, catalog, forecast):
     )
     from solarboat_data_pipeline_spark.pipeline import grid_bounds
 
-    stats: dict = {}
-    wide = parse_stage(spark, CORPUS, catalog, stats_out=stats)
-    assert "first_ts" in stats and stats["dup_n"] >= 0
-    kb = (stats["first_ts"], stats["last_ts"])
+    edge = tmp_path / "edge_rejects.candump"
+    edge.write_text(EDGE_REJECTS)
+    for corpus in (CORPUS, str(edge)):
+        stats: dict = {}
+        wide = parse_stage(spark, corpus, catalog, stats_out=stats)
+        assert "first_ts" in stats and stats["dup_n"] >= 0
+        kb = (stats["first_ts"], stats["last_ts"])
 
-    # the recorded stats bounds ARE the cropped table's exact min/max
-    m = wide.agg(F.min("timestamp"), F.max("timestamp")).first()
-    assert (m[0], m[1]) == kb
+        # the recorded stats bounds ARE the decoded table's exact min/max
+        m = wide.agg(F.min("timestamp"), F.max("timestamp")).first()
+        assert (m[0], m[1]) == kb, corpus
 
-    _rows_equal(
-        resample_stage(wide, 1.0),
-        resample_stage(wide, 1.0, known_bounds=kb),
-    )
-    res = resample_stage(wide, 1.0)
-    gkb = grid_bounds(kb, 1.0)
-    g = res.agg(F.min("timestamp"), F.max("timestamp")).first()
-    assert (g[0], g[1]) == gkb
-    _rows_equal(
-        unify_forecast_stage(res, forecast, 1.0),
-        unify_forecast_stage(res, forecast, 1.0, known_bounds=gkb),
-    )
-    _rows_equal(
-        asfreq(res, 1.0),
-        asfreq(res, 1.0, known_bounds=gkb),
-    )
-    _rows_equal(
-        resample_mean(wide, 1.0, dense=True),
-        resample_mean(wide, 1.0, dense=True, known_bounds=kb),
-    )
-    # time_spine: driver-side count (datetime bounds) vs the job form
-    # (string bounds force the Spark path)
-    py_spine = time_spine(spark, gkb[0], gkb[1], 1.0)
-    job_spine = time_spine(
-        spark, gkb[0].isoformat(sep=" "), gkb[1].isoformat(sep=" "), 1.0
-    )
-    assert [r[0] for r in py_spine.collect()] == [
-        r[0] for r in job_spine.collect()
-    ]
+        _rows_equal(
+            resample_stage(wide, 1.0),
+            resample_stage(wide, 1.0, known_bounds=kb),
+        )
+        res = resample_stage(wide, 1.0)
+        gkb = grid_bounds(kb, 1.0)
+        g = res.agg(F.min("timestamp"), F.max("timestamp")).first()
+        assert (g[0], g[1]) == gkb
+        _rows_equal(
+            unify_forecast_stage(res, forecast, 1.0),
+            unify_forecast_stage(res, forecast, 1.0, known_bounds=gkb),
+        )
+        _rows_equal(
+            asfreq(res, 1.0),
+            asfreq(res, 1.0, known_bounds=gkb),
+        )
+        _rows_equal(
+            resample_mean(wide, 1.0, dense=True),
+            resample_mean(wide, 1.0, dense=True, known_bounds=kb),
+        )
+        # time_spine: driver-side count (datetime bounds) vs the job form
+        # (string bounds force the Spark path)
+        py_spine = time_spine(spark, gkb[0], gkb[1], 1.0)
+        job_spine = time_spine(
+            spark, gkb[0].isoformat(sep=" "), gkb[1].isoformat(sep=" "), 1.0
+        )
+        assert [r[0] for r in py_spine.collect()] == [
+            r[0] for r in job_spine.collect()
+        ]
 
 
 def test_full_pipeline_enrichment(spark, catalog, forecast):
@@ -172,45 +190,3 @@ def test_unify_stages_compose_independently(spark, catalog, forecast):
     with_gps = unify_gps_stage(with_fc, track)
     assert "gps_latitude" in with_gps.columns
     assert with_gps.count() == 4
-
-
-def test_resample_stage_bucketed_matches_global(spark, catalog):
-    # every scale form must match the global-window form cell-for-cell:
-    # the explicit r5 bucketed kernel, the measured auto selection at a
-    # small grid (falls through to fused/classic), and the forced
-    # group-width plan (SCALE_GRID_INMEM_MAX patched to 0)
-    import solarboat_data_pipeline_spark.pipeline as pl
-
-    wide = parse_stage(spark, CORPUS, catalog)
-    g = resample_stage(wide, 1.0)
-    forms = {
-        "bucketed": resample_stage(wide, 1.0, scale_buckets=3,
-                                   strategy="bucketed"),
-        "auto_small": resample_stage(wide, 1.0, scale_buckets=3),
-    }
-    orig = pl.SCALE_GRID_INMEM_MAX
-    try:
-        pl.SCALE_GRID_INMEM_MAX = 0
-        forms["auto_big"] = resample_stage(wide, 1.0, scale_buckets=3)
-    finally:
-        pl.SCALE_GRID_INMEM_MAX = orig
-    # the big-grid selection must be the structurally bounded plan: its
-    # lead window partitions by (column, grid group), never one task
-    plan = forms["auto_big"]._jdf.queryExecution().optimizedPlan().toString()
-    assert "__g" in plan, plan
-    ga = {r["timestamp"]: r for r in g.collect()}
-    for name, s in forms.items():
-        sa = {r["timestamp"]: r for r in s.collect()}
-        assert ga.keys() == sa.keys(), name
-        for ts, row in ga.items():
-            for c in g.columns:
-                if c == "timestamp":
-                    continue
-                va, vb = row[c], sa[ts][c]
-                assert (va is None) == (vb is None), (name, ts, c)
-                if va is not None:
-                    assert math.isclose(va, vb, rel_tol=1e-9), (name, ts, c)
-    with pytest.raises(ValueError, match="composes with"):
-        resample_stage(wide, 1.0, scale_buckets=3, strategy="fused")
-    with pytest.raises(ValueError, match="requires scale_buckets"):
-        resample_stage(wide, 1.0, strategy="bucketed")

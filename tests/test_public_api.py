@@ -87,6 +87,65 @@ def test_streaming_namespace():
     assert callable(sb.stateful.stream_ffill)
 
 
+# every package call the benchmark makes (perfbench/workloads.py, run.py),
+# as (module, function, positional argument count, keyword arguments):
+# the benchmark directory is frozen between benchmark revisions, so a
+# signature change here would break it silently
+BENCHMARK_CALLS = [
+    ("", "get_spark", 0, ("app_name",)),
+    ("catalog", "CanCatalog.load", 1, ()),
+    ("sources.candump", "scan_candump", 2, ()),
+    ("sources.candump", "extract_frames", 1, ("with_order",)),
+    ("operators.parse", "with_timestamp", 1, ()),
+    ("operators.parse", "with_frame_meta", 1, ()),
+    ("operators.parse", "decode_long", 2, ()),
+    ("functions.solar", "solcast_preprocess", 1, ()),
+    ("functions.solar", "poa_irradiance", 1,
+     ("latitude", "longitude", "period_seconds")),
+    ("operators.timeseries", "trapezoid_integral", 1,
+     ("col", "out_col", "time_constant")),
+    ("functions.geo", "derive_track", 1, ()),
+    ("sources.gpx", "scan_gpx", 2, ()),
+    ("sources.sinks", "write_parquet", 2, ()),
+    ("pipeline", "run_pipeline", 3, ("period_seconds", "forecast", "gpx_path")),
+    ("pipeline", "parse_stage", 3, ("stats_out",)),
+    ("pipeline", "resample_stage", 2, ("known_bounds",)),
+    ("pipeline", "unify_forecast_stage", 3, ("known_bounds",)),
+    ("pipeline", "grid_bounds", 2, ()),
+    ("pipeline", "unify_gps_stage", 2, ()),
+    ("streaming.pipeline", "stream_candump", 2, ("max_files_per_trigger",)),
+    ("streaming.pipeline", "write_parquet_stream", 3, ("available_now",)),
+    ("streaming.stateful", "stream_ffill", 1, ("key_cols",)),
+]
+
+
+def test_benchmark_calls_bind(spark):
+    import inspect
+    import os
+
+    for mod, name, n_pos, kws in BENCHMARK_CALLS:
+        obj = importlib.import_module(
+            "solarboat_data_pipeline_spark" + (f".{mod}" if mod else "")
+        )
+        for part in name.split("."):
+            obj = getattr(obj, part)
+        # raises TypeError when the benchmark's call no longer fits
+        inspect.signature(obj).bind(*[None] * n_pos, **dict.fromkeys(kws))
+
+    # the stats_out keys the benchmark reads back
+    from solarboat_data_pipeline_spark.catalog import CanCatalog
+    from solarboat_data_pipeline_spark.pipeline import parse_stage
+
+    data = os.path.join(os.path.dirname(__file__), "data")
+    stats: dict = {}
+    parse_stage(
+        spark, os.path.join(data, "sample.candump"),
+        CanCatalog.load(os.path.join(data, "mini_can_ids.json")),
+        stats_out=stats,
+    )
+    assert {"first_ts", "last_ts"} <= stats.keys()
+
+
 def test_root_import_has_no_spark_session(monkeypatch):
     # importing the package must not create a SparkSession (module-level
     # side effects would break spark-submit workflows that configure the

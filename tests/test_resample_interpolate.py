@@ -87,21 +87,23 @@ def test_fused_matches_classic_randomized(spark):
         _assert_same(fused, _classic(df, 1.0, limit))
 
 
-def test_fused_group_width_matches_global(spark):
+def test_group_width_matches_global(spark):
     """The 100 TB form: bucket-group windows + boundary-table carry must
     equal the global per-column window exactly, including gaps that span
-    several (possibly empty) groups."""
+    several (possibly empty) groups, same-µs rows and an all-null
+    column."""
     rng = random.Random(11)
-    cols = ("a", "b", "c")
+    cols = ("a", "b", "c", "z")
     rows = []
     t = 0.0
-    for _ in range(300):
-        t += rng.random() * 9.0
+    for i in range(300):
+        t += rng.random() * 9.0 if i % 50 else 0.0
         rows.append(
-            (t, *[rng.uniform(-5, 5) if rng.random() < 0.2 else None for _ in cols])
+            (t, *[rng.uniform(-5, 5) if rng.random() < 0.2 else None
+                  for _ in cols[:-1]], None)
         )
     df = _mk(spark, rows, cols)
-    for limit in (None, 3):
+    for limit in (None, 3, 60):
         for la in ("inside", None):
             base = tsops.resample_interpolate(df, 1.0, limit=limit, limit_area=la)
             for gw in (1, 7, 64):
@@ -139,9 +141,9 @@ def test_resample_stage_strategies_agree(spark):
             (t, *[rng.uniform(0, 10) if rng.random() < 0.1 else None for _ in cols])
         )
     df = _mk(spark, rows, cols)
-    fused = resample_stage(df, 1.0)  # auto → fused at 40 cols
-    classic = resample_stage(df, 1.0, strategy="classic")
-    _assert_same(fused, classic)
+    stage = resample_stage(df, 1.0)  # fused at 40 cols, limit 60 s / 1 s
+    _assert_same(stage, tsops.resample_interpolate(df, 1.0, limit=60))
+    _assert_same(stage, _classic(df, 1.0, 60))
 
 
 def test_fused_plan_has_single_sort(spark):

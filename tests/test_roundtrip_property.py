@@ -58,10 +58,10 @@ def test_format_then_parse_roundtrip(spark, frames):
         assert r["payload_hex"] == want_payload
 
 
-# randomized decode-strategy equivalence: for an arbitrary mini catalog
-# topic mix (u8 / u16 pairs / bitfields) and arbitrary frames — including
-# same-µs duplicates, unknown signatures, and wrong payload lengths —
-# every decode_wide strategy must produce identical cells
+# randomized decode equivalence: for an arbitrary mini catalog topic mix
+# (u8 / u16 pairs / bitfields) and arbitrary frames — including same-µs
+# duplicates, unknown signatures, and wrong payload lengths — decode_wide
+# must produce the same cells as the pivoted long decode
 DECODE_FRAME = st.tuples(
     st.integers(0, 49),  # same-second base keeps duplicate ts likely
     st.sampled_from([0, 100, 100, 200]),  # µs with planted collisions
@@ -80,7 +80,9 @@ def test_decode_strategies_agree_on_random_frames(spark, frames):
 
     from solarboat_data_pipeline_spark.catalog import CanCatalog
     from solarboat_data_pipeline_spark.operators.parse import (
+        decode_long,
         decode_wide,
+        pivot_wide,
         with_frame_meta,
         with_timestamp,
     )
@@ -102,8 +104,9 @@ def test_decode_strategies_agree_on_random_frames(spark, frames):
     )
     fr = with_frame_meta(with_timestamp(lines))
     outs = [
-        decode_wide(fr, cat, downcast=False, strategy=s)
-        for s in ("fused", "long", "frame_map")
+        decode_wide(fr, cat, downcast=False),
+        pivot_wide(decode_long(fr, cat), cat, strategy="agg"),
+        pivot_wide(decode_long(fr, cat), cat, strategy="map"),
     ]
     collected = [
         {r["timestamp"]: r for r in o.collect()} for o in outs

@@ -98,14 +98,21 @@ def test_trapezoid_matches_global(spark):
     _approx_eq(_vals(g, ("e",)), _vals(s, ("e",)))
 
 
-@pytest.mark.parametrize("limit,area", [(None, "inside"), (2, "inside"), (None, None), (3, None)])
+@pytest.mark.parametrize(
+    "limit,area",
+    [(None, "inside"), (2, "inside"), (None, None), (3, None), (60, "inside")],
+)
 def test_interpolate_matches_global(spark, limit, area):
-    df = _uniq_ts(_mk_series(spark, seed=5))
-    g = ts.interpolate_time(df, value_cols=["v"], limit=limit, limit_area=area)
-    s = scale.interpolate_time(
-        df, value_cols=["v"], limit=limit, limit_area=area, num_buckets=BUCKETS
+    # "z" is all-null, as most catalog columns are on a resampled grid
+    df = _uniq_ts(_mk_series(spark, seed=5)).withColumn(
+        "z", F.lit(None).cast("double")
     )
-    _approx_eq(_vals(g), _vals(s))
+    cols = ["v", "z"]
+    g = ts.interpolate_time(df, value_cols=cols, limit=limit, limit_area=area)
+    s = scale.interpolate_time(
+        df, value_cols=cols, limit=limit, limit_area=area, num_buckets=BUCKETS
+    )
+    _approx_eq(_vals(g, cols), _vals(s, cols))
 
 
 def _mk_wide(spark, seed=11, n=120, n_cols=50):

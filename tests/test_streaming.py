@@ -126,6 +126,9 @@ def test_stream_decode_wide_matches_batch(spark, catalog, tmp_path):
     wide = stream_decode_wide(frames, catalog, watermark="0 seconds",
                               downcast=False)
     assert wide.isStreaming
+    # the batch decode counts duplicates eagerly, which a stream cannot
+    with pytest.raises(ValueError, match="stream_decode_wide"):
+        decode_wide(frames, catalog)
     q = (
         wide.writeStream.format("memory")
         .queryName("wide_stream")
@@ -142,8 +145,7 @@ def test_stream_decode_wide_matches_batch(spark, catalog, tmp_path):
         with_timestamp(extract_frames(scan_candump(spark, CORPUS)))
     )
     want = {r["timestamp"]: r for r in
-            decode_wide(batch_frames, catalog, downcast=False,
-                        strategy="long").collect()}
+            decode_wide(batch_frames, catalog, downcast=False).collect()}
     # NO crop on the stream (the watermark replaces P4), so the batch
     # side here decodes uncropped frames too
     assert got.keys() == want.keys() and len(got) == 8
