@@ -679,8 +679,9 @@ def _publish(spark, out, medians):
 
 def _compact_record(out: dict) -> dict:
     """The tail-window-safe record: the driver-contract keys first
-    (metric/value/unit/queries/sf), then small scalar flags — and NO
-    second per-query dict, so the line stays ~1.65 KB at 48 board rows
+    (metric/value/unit/queries/sf), then small scalar flags and at most
+    three ``burst_rows`` names — and NO second per-query dict, so the
+    line stays under 1.9 KB at 48 board rows even with every row flagged
     (vs the 2000-char tail window). ``queries`` is the same object the
     full line carries — the published MINs, byte-identical."""
     compact = {
@@ -691,10 +692,18 @@ def _compact_record(out: dict) -> dict:
     for k in (
         "normalization", "value_normalized", "contended",
         "anchors_diverged", "burst_rows", "steal_sec_window",
-        "retry_reason", "complete", "full_record",
+        "retry_reason", "complete", "full_record", "full_record_error",
     ):
         if k in out:
             compact[k] = out[k]
+    # bounded so the worst case (every row flagged, 7-char values, a
+    # failed sidecar write) still fits: the full line keeps the whole
+    # burst list and error text
+    if "burst_rows" in out:
+        compact["burst_rows"] = out["burst_rows"][:3]
+        compact["burst_rows_n"] = len(out["burst_rows"])
+    if "full_record_error" in out:
+        compact["full_record_error"] = out["full_record_error"][:40]
     return compact
 
 

@@ -834,7 +834,7 @@ _W3_WIDE_SQL_COLS = ",\n".join(
 )
 def w3_interpolate_wide_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 on the WIDE telemetry shape through the scale path: 10 value
-    columns trips the ``auto`` strategy into the long-format plan —
+    columns trips the width switch into the long-format plan —
     unpivot → one bucketed interpolation partitioned by (``__name``,
     bucket) → repivot — instead of fanning 4 carry exprs per column
     (reference shape: 233 signals, SURVEY §1.3). The oracle interpolates

@@ -507,7 +507,6 @@ def interpolate_time(
     num_buckets: int | None = None,
     bounds: Sequence[int] | None = None,
     partition_cols: Sequence[str] = (),
-    strategy: str = "auto",
 ) -> DataFrame:
     """W3/W4 at scale: same pandas ``interpolate(method="time")`` semantics
     as :func:`timeseries.interpolate_time`, with the previous-valid and
@@ -519,10 +518,10 @@ def interpolate_time(
     more cheap aggregate branches over the base (bucket row counts and
     trailing-null counts), never from re-running a window.
 
-    ``strategy`` mirrors :func:`timeseries.interpolate_time`: the wide
+    The form follows :func:`timeseries.interpolate_time`: the wide
     form pays 4 carry exprs per value column, so past
     ``WIDE_INTERPOLATE_MAX_COLS`` columns (a 233-signal telemetry table)
-    ``"auto"`` switches to the long plan — unpivot, ONE bucketed
+    it switches to the long plan — unpivot, ONE bucketed
     interpolation partitioned by (series, ``__name``), repivot — keeping
     the carry machinery per (name, bucket) instead of fanning expressions
     out per column. ``partition_cols`` scopes every scan to independent
@@ -538,11 +537,7 @@ def interpolate_time(
         value_cols = [c for c in df.columns if c != ts_col and c not in pc]
     if limit_area not in ("inside", None):
         raise ValueError("limit_area must be 'inside' or None")
-    if strategy not in ("auto", "wide", "long"):
-        raise ValueError("strategy must be auto|wide|long")
-    use_long = strategy == "long" or (
-        strategy == "auto" and len(value_cols) > WIDE_INTERPOLATE_MAX_COLS
-    )
+    use_long = len(value_cols) > WIDE_INTERPOLATE_MAX_COLS
     # the long plan only carries (partition, ts, values); fall back to
     # wide when the frame holds extra passenger columns
     extras = set(df.columns) - {ts_col, *pc, *value_cols}
@@ -692,7 +687,6 @@ def _interpolate_long(
         limit_area=limit_area,
         bounds=bounds,
         partition_cols=[*partition_cols, "__idx"],
-        strategy="wide",
     )
     m = filled.groupBy(*partition_cols, ts_col).agg(
         F.map_from_entries(F.collect_list(F.struct("__idx", "__v"))).alias(

@@ -88,13 +88,6 @@ def time_spine(
     )
 
 
-# beyond this many value columns the per-column avg aggregates dominate
-# (n_cols agg buffers touched per input row); the sparse long path
-# explodes non-null cells instead — measured 54 s → ~15 s on 11.9 M rows
-# × 187 columns at ~2% density
-WIDE_RESAMPLE_MAX_AGG_COLS = 32
-
-
 def resample_mean(
     df: DataFrame,
     period_seconds: float,
@@ -102,7 +95,6 @@ def resample_mean(
     value_cols: Sequence[str] | None = None,
     partition_cols: Sequence[str] = (),
     dense: bool = True,
-    known_bounds: tuple | None = None,
 ) -> DataFrame:
     """A3: fixed-period mean downsample (``df.resample(period).mean()``,
     ``lib/resampler.py:97-99``).
@@ -111,13 +103,6 @@ def resample_mean(
     reference's 1 s / 100 ms periods. With ``dense=True`` empty buckets are
     materialized as all-null rows (pandas emits the dense grid), via a
     spine join; the spine side is tiny relative to data and broadcasts.
-
-    ``known_bounds`` (r14, guide §2.4): ``(lo, hi)`` datetimes covering
-    ``df``'s EXACT ``ts_col`` min/max (e.g. the parse stage's fused
-    stats bounds). When given (and the frame is unpartitioned), the
-    dense spine derives from ``floor(lo)``/``floor(hi)`` arithmetically
-    instead of re-aggregating the data — one full-input job dropped.
-    Both bounds rows must exist in ``df`` or the grid would be wrong.
     """
     step_us = int(round(period_seconds * MICROS))
     if value_cols is None:
@@ -127,70 +112,14 @@ def resample_mean(
     bucket = F.timestamp_micros(
         (F.floor(_us(F.col(ts_col)) / step_us) * step_us).cast("long")
     )
-    if len(value_cols) > WIDE_RESAMPLE_MAX_AGG_COLS:
-        # sparse long path for wide telemetry tables: n_cols avg
-        # aggregates evaluated per input row degrade linearly with
-        # catalog width (the wide parse output is ~2% non-null), so
-        # explode only the non-null cells into thin (bucket, idx, value)
-        # rows, average those, and repivot via one int-keyed map. Buckets
-        # whose cells are all null still appear (all-null rows) via the
-        # distinct bucket-key join — identical output to the agg path.
-        base = df.withColumn("__bucket", bucket)
-        arr = F.array(*[F.col(c).cast("double") for c in value_cols])
-        long = base.select(
-            *partition_cols, "__bucket", F.posexplode(arr).alias("__idx", "__v")
-        ).where(F.col("__v").isNotNull())
-        a1 = long.groupBy(*partition_cols, "__bucket", "__idx").agg(
-            F.avg("__v").alias("__v")
-        )
-        mapped = a1.groupBy(*partition_cols, "__bucket").agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("__idx", "__v"))
-            ).alias("__m")
-        )
-        keys = base.select(*partition_cols, "__bucket").distinct()
-        out = keys.join(mapped, [*partition_cols, "__bucket"], "left").select(
-            *partition_cols,
-            F.col("__bucket").alias(ts_col),
-            *[
-                F.col("__m").getItem(i).alias(c)
-                for i, c in enumerate(value_cols)
-            ],
-        )
-    else:
-        aggs = [F.avg(c).alias(c) for c in value_cols]
-        out = (
-            df.withColumn("__bucket", bucket)
-            .groupBy(*partition_cols, "__bucket")
-            .agg(*aggs)
-            .withColumnRenamed("__bucket", ts_col)
-        )
+    out = (
+        df.withColumn("__bucket", bucket)
+        .groupBy(*partition_cols, "__bucket")
+        .agg(*[F.avg(c).alias(c) for c in value_cols])
+        .withColumnRenamed("__bucket", ts_col)
+    )
     if not dense:
         return out
-    spark = df.sparkSession
-    if known_bounds is not None and not partition_cols:
-        import datetime as _dt
-
-        lo, hi = known_bounds
-        if lo is None:
-            return out
-        if type(lo) is _dt.datetime and type(hi) is _dt.datetime:
-            from pyspark.sql.types import TimestampType
-
-            t = TimestampType()
-            # floor both bounds onto the bucket grid with the same
-            # integer-µs arithmetic the bucket expression uses; the
-            # spine instants then equal the measured min/max buckets
-            lo_us = t.toInternal(lo) // step_us * step_us
-            hi_us = t.toInternal(hi) // step_us * step_us
-            spine = spark.range(
-                int(max((hi_us - lo_us) // step_us + 1, 0))
-            ).select(
-                F.timestamp_micros(
-                    F.lit(lo_us) + F.col("id") * step_us
-                ).alias(ts_col)
-            )
-            return spine.join(out, [ts_col], "left")
     bounds = out.groupBy(*partition_cols).agg(
         F.min(ts_col).alias("__lo"), F.max(ts_col).alias("__hi")
     )
@@ -211,7 +140,9 @@ def resample_mean(
         row = bounds.first()
         if row is None or row["__lo"] is None:
             return out
-        spine = time_spine(spark, row["__lo"], row["__hi"], period_seconds, ts_col)
+        spine = time_spine(
+            df.sparkSession, row["__lo"], row["__hi"], period_seconds, ts_col
+        )
     return spine.join(out, [*partition_cols, ts_col], "left")
 
 
@@ -230,7 +161,6 @@ def interpolate_time(
     partition_cols: Sequence[str] = (),
     limit: int | None = None,
     limit_area: str | None = "inside",
-    strategy: str = "auto",
 ) -> DataFrame:
     """W3/W4: pandas ``interpolate(method="time")`` parity as window exprs.
 
@@ -244,10 +174,10 @@ def interpolate_time(
     * ``limit=n`` fills only the first *n* nulls of each gap (pandas limit
       semantics — ``sample_limit`` at ``lib/resampler.py:63-66``).
 
-    Pure window composition, no UDFs. ``strategy``: ``"wide"`` computes
-    window exprs per column in place; ``"long"`` unpivots, interpolates one
-    value column partitioned by series name, and repivots — the scale path
-    for wide telemetry tables; ``"auto"`` picks by column count.
+    Pure window composition, no UDFs. Up to ``WIDE_INTERPOLATE_MAX_COLS``
+    value columns the window exprs run per column in place; wider frames
+    unpivot, interpolate one value column partitioned by series name, and
+    repivot — the scale path for wide telemetry tables.
 
     Duplicate order keys are OUTSIDE the contract, matching the reference:
     pandas ``reindex`` raises on a duplicate index (``lib/resampler.py``
@@ -261,12 +191,7 @@ def interpolate_time(
         value_cols = [
             c for c in df.columns if c != ts_col and c not in partition_cols
         ]
-    if strategy not in ("auto", "wide", "long"):
-        raise ValueError("strategy must be auto|wide|long")
-    use_long = (
-        strategy == "long"
-        or (strategy == "auto" and len(value_cols) > WIDE_INTERPOLATE_MAX_COLS)
-    )
+    use_long = len(value_cols) > WIDE_INTERPOLATE_MAX_COLS
     # the long plan only carries (partition, ts, values); fall back to wide
     # when the frame holds extra passenger columns
     extras = set(df.columns) - {ts_col, *partition_cols, *value_cols}
@@ -362,7 +287,6 @@ def _interpolate_time_long(
         partition_cols=[*partition_cols, "__idx"],
         limit=limit,
         limit_area=limit_area,
-        strategy="wide",
     )
     m = filled.groupBy(*partition_cols, ts_col).agg(
         F.map_from_entries(F.collect_list(F.struct("__idx", "__v"))).alias(
@@ -400,8 +324,9 @@ def resample_interpolate(
     of that is needed: a null run between two valid samples is filled by
     arithmetic in the run bounds alone, so this kernel
 
-    1. averages the non-null input cells per (bucket, column) — the same
-       sparse aggregate the wide resample path uses;
+    1. averages the non-null input cells per (bucket, column) — only the
+       non-null cells are exploded, so the aggregate's cost follows the
+       data's density, not the catalog width;
     2. takes ONE ``lead()`` window over those sparse valid samples only
        (the single sort, over ~non-null-density of the grid volume);
     3. GENERATES valid and filled cells in ONE pass with
@@ -455,8 +380,10 @@ def resample_interpolate(
     # are all null still extends the dense spine, as in resample_mean).
     # A caller that already measured the global bounds (e.g. the parse
     # stage's stats_out) passes them as ``known_bounds=(min_ts, max_ts)``
-    # and the plan loses this aggregate subtree — partition_cols=() only, where the bounds
-    # ARE one global row.
+    # and the plan loses this aggregate subtree — partition_cols=() only,
+    # where the bounds ARE one global row. An empty frame's measured
+    # ``(None, None)`` gives null bounds, so the spine (and the output)
+    # is empty, exactly as the aggregate would give.
     if known_bounds is not None and not pc:
         lo_ts, hi_ts = known_bounds
         kb = df.sparkSession.range(1).select(

@@ -29,6 +29,7 @@ from solarboat_data_pipeline_spark.operators.parse import (
     with_timestamp,
 )
 from solarboat_data_pipeline_spark.operators.timeseries import (
+    WIDE_INTERPOLATE_MAX_COLS,
     asfreq,
     asof_join_backward,
     clean_timestamp_outliers,
@@ -36,11 +37,6 @@ from solarboat_data_pipeline_spark.operators.timeseries import (
     interpolate_time,
     reindex_interpolate,
     resample_interpolate,
-    resample_mean,
-)
-from solarboat_data_pipeline_spark.operators.timeseries import (
-    WIDE_INTERPOLATE_MAX_COLS,
-    WIDE_RESAMPLE_MAX_AGG_COLS,
 )
 from solarboat_data_pipeline_spark.sources.candump import extract_frames, scan_candump
 from solarboat_data_pipeline_spark.sources.gpx import scan_gpx
@@ -110,34 +106,23 @@ def resample_stage(
     and gap-fill ≤ ``max_gap_seconds`` with bounded time interpolation
     (``limit = max(1, gap/period)`` samples, ``lib/resampler.py:63-66``).
 
-    Above ``WIDE_RESAMPLE_MAX_AGG_COLS`` value columns the stage runs the
-    single-kernel dense-grid form
-    (:func:`operators.timeseries.resample_interpolate`: one sparse sort +
-    arithmetic gap generation), the regime where the composed plan's
-    dense-grid sorts dominate; narrower frames compose ``resample_mean`` +
-    ``interpolate_time``. Cell-for-cell equivalence is locked by
-    ``tests/test_resample_interpolate.py``. Grids too large for one
-    task's sort take the bucketed kernels directly
+    One kernel at every catalog width: the fused dense-grid form
+    :func:`operators.timeseries.resample_interpolate` (one sparse sort +
+    arithmetic gap generation), cell-for-cell equal to ``resample_mean`` +
+    ``interpolate_time`` (locked by ``tests/test_resample_interpolate.py``).
+    Grids too large for one task's sort take the bucketed kernels directly
     (``resample_interpolate(group_width=...)``,
     ``operators.scale.interpolate_time``).
 
     ``known_bounds`` (r14, guide §2.4): ``(lo, hi)`` datetimes equal to
     ``wide``'s exact ``ts_col`` min/max — e.g. ``parse_stage(stats_out=...)``
-    bounds. Skips this stage's own bounds job (the dense-spine
-    aggregate)."""
-    limit = max(1, int(max_gap_seconds / period_seconds))
-    if len(wide.columns) - 1 > WIDE_RESAMPLE_MAX_AGG_COLS:
-        # A measured-empty bounds pair degrades to the kernel's own
-        # aggregate (which yields the same empty grid) — the fused
-        # kernel's known_bounds contract expects real instants.
-        kb = known_bounds if (known_bounds and known_bounds[0] is not None) else None
-        return resample_interpolate(
-            wide, period_seconds, ts_col=ts_col, limit=limit,
-            limit_area="inside", known_bounds=kb,
-        )
-    res = resample_mean(wide, period_seconds, ts_col=ts_col, dense=True,
-                        known_bounds=known_bounds)
-    return interpolate_time(res, ts_col=ts_col, limit=limit, limit_area="inside")
+    bounds, ``(None, None)`` for an empty table. Skips this stage's own
+    bounds aggregate."""
+    return resample_interpolate(
+        wide, period_seconds, ts_col=ts_col,
+        limit=max(1, int(max_gap_seconds / period_seconds)),
+        limit_area="inside", known_bounds=known_bounds,
+    )
 
 
 def unify_forecast_stage(

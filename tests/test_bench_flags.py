@@ -18,13 +18,18 @@ _BENCH = os.path.join(os.path.dirname(__file__), os.pardir, "bench.py")
 
 
 @pytest.fixture(scope="module")
-def burst_rows():
+def bench_module():
     # bench.py is a script, not a package module; load it directly but
-    # only for the pure helper (no SparkSession is created at import).
+    # only for the pure helpers (no SparkSession is created at import).
     spec = importlib.util.spec_from_file_location("bench_module", _BENCH)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod._burst_rows
+    return mod
+
+
+@pytest.fixture(scope="module")
+def burst_rows(bench_module):
+    return bench_module._burst_rows
 
 
 def test_quiet_board_flags_nothing(burst_rows):
@@ -52,14 +57,6 @@ def test_none_and_missing_medians_safe(burst_rows):
     timings = {"a": 1.0, "b": None, "c": 0.9}
     medians = {"a": None, "c": 0.95}
     assert burst_rows(timings, medians) == []
-
-
-@pytest.fixture(scope="module")
-def bench_module():
-    spec = importlib.util.spec_from_file_location("bench_module", _BENCH)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def test_compact_record_fits_tail_window(bench_module):
@@ -102,3 +99,39 @@ def test_compact_record_fits_tail_window(bench_module):
     assert "queries_median" not in compact
     # first key on the line is the contract anchor
     assert line.startswith('{"metric"')
+
+
+def test_compact_record_worst_case_fits_tail_window(bench_module):
+    """Every board row flagged as a burst row, 7-character values
+    everywhere and a 200-char sidecar error: the compact line must still
+    fit the tail window, carrying the flag count and the error's head."""
+    import json
+
+    names = list(bench_module.HEADLINE) + [
+        "parse_candump_2m_lines", "parse_real_catalog_6m_lines",
+    ]
+    queries = {n: 100.001 + i for i, n in enumerate(names)}
+    out = {
+        "metric": "headline_queries_total_time",
+        "value": 4321.09,
+        "unit": "sec",
+        "queries": queries,
+        "sf": 0.1,
+        "queries_median": dict(queries),
+        "normalization": 0.93751,
+        "value_normalized": 4051.02,
+        "contended": True,
+        "anchors_diverged": True,
+        "burst_rows": list(names),
+        "steal_sec_window": 1360.68,
+        "retry_reason": "burst_rows",
+        "complete": True,
+        "full_record_error": "x" * 200,
+    }
+    compact = bench_module._compact_record(out)
+    line = json.dumps(compact)
+    assert len(line) < 1900, len(line)
+    assert compact["burst_rows"] == names[:3]
+    assert compact["burst_rows_n"] == len(names)
+    assert compact["full_record_error"] == out["full_record_error"][:40]
+    assert compact["queries"] == queries

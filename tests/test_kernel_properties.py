@@ -5,14 +5,11 @@ kernels against their straightforward exact twins:
   two-phase shard plan must be invisible in the result, including under
   duplicate order values, where only the VALUE multiset per rank is
   deterministic);
-* ``resample_mean`` sparse long path ≡ per-column aggregate path (the
-  width-triggered strategy switch must not change a single cell);
 * ``interval_join`` chunked equi-join plan ≡ brute-force range predicate
   (timeseries.py — chunk explosion over arbitrary interval/chunk
   geometry, intervals nesting/overlapping/degenerate).
 """
 
-import math
 from collections import Counter
 
 import pytest
@@ -57,48 +54,6 @@ def test_salted_topk_matches_plain_window(spark, rows, k, n_salts):
         for r in res:
             per_key.setdefault(r["key"], []).append(r["rank"])
         assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_key.values())
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 40),  # epoch second
-            st.one_of(st.none(), st.floats(-10, 10, allow_nan=False)),
-            st.one_of(st.none(), st.floats(-10, 10, allow_nan=False)),
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    st.sampled_from([1.0, 2.0]),
-)
-def test_resample_sparse_long_path_matches_agg_path(spark, rows, period):
-    df = spark.createDataFrame(
-        [(t, a, b) for t, a, b in rows], "epoch long, a double, b double"
-    ).select(F.timestamp_seconds("epoch").alias("timestamp"), "a", "b")
-
-    def run():
-        out = tsops.resample_mean(df, period, dense=True)
-        return sorted(
-            ((r["timestamp"], r["a"], r["b"]) for r in out.collect()),
-            key=lambda r: r[0],
-        )
-
-    agg = run()
-    orig = tsops.WIDE_RESAMPLE_MAX_AGG_COLS
-    tsops.WIDE_RESAMPLE_MAX_AGG_COLS = 1  # force the sparse long path
-    try:
-        sparse = run()
-    finally:
-        tsops.WIDE_RESAMPLE_MAX_AGG_COLS = orig
-    assert len(agg) == len(sparse)
-    for (t1, a1, b1), (t2, a2, b2) in zip(agg, sparse):
-        assert t1 == t2
-        for x, y in ((a1, a2), (b1, b2)):
-            if x is None or y is None:
-                assert x is None and y is None, (rows, period)
-            else:
-                assert math.isclose(x, y, rel_tol=1e-12), (rows, period)
 
 
 @settings(max_examples=10, deadline=None)

@@ -94,7 +94,6 @@ def test_known_bounds_forms_match_measured(spark, catalog, forecast, tmp_path):
     decoded table's bounds."""
     from solarboat_data_pipeline_spark.operators.timeseries import (
         asfreq,
-        resample_mean,
         time_spine,
     )
     from solarboat_data_pipeline_spark.pipeline import grid_bounds
@@ -126,10 +125,6 @@ def test_known_bounds_forms_match_measured(spark, catalog, forecast, tmp_path):
         _rows_equal(
             asfreq(res, 1.0),
             asfreq(res, 1.0, known_bounds=gkb),
-        )
-        _rows_equal(
-            resample_mean(wide, 1.0, dense=True),
-            resample_mean(wide, 1.0, dense=True, known_bounds=kb),
         )
         # time_spine: driver-side count (datetime bounds) vs the job form
         # (string bounds force the Spark path)

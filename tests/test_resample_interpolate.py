@@ -1,7 +1,8 @@
-"""Fused resample+interpolate kernel (timeseries.resample_interpolate):
-cell-for-cell equivalence with the classic resample_mean→interpolate_time
-composition, across gap shapes, limits, duplicate timestamps, all-null
-columns, leading/trailing nulls, and both limit_area modes."""
+"""Fused resample+interpolate kernel (timeseries.resample_interpolate), the
+one form pipeline.resample_stage runs: cell-for-cell equivalence with the
+classic resample_mean→interpolate_time composition, across gap shapes,
+limits, duplicate timestamps, all-null columns, leading/trailing nulls,
+and both limit_area modes."""
 
 import math
 import random
@@ -127,23 +128,34 @@ def test_fused_all_null_column_and_empty(spark):
     fused = tsops.resample_interpolate(df, 1.0, limit=None)
     _assert_same(fused, _classic(df, 1.0, None))
     empty = df.where(F.lit(False))
-    assert tsops.resample_interpolate(empty, 1.0).count() == 0
+    measured = tsops.resample_interpolate(empty, 1.0)
+    assert measured.count() == 0
+    # parse_stage(stats_out=) measures an empty table as (None, None)
+    for out in (
+        tsops.resample_interpolate(empty, 1.0, known_bounds=(None, None)),
+        resample_stage(empty, 1.0, known_bounds=(None, None)),
+    ):
+        assert out.count() == 0
+        assert out.dtypes == measured.dtypes
 
 
 def test_resample_stage_strategies_agree(spark):
-    rng = random.Random(7)
-    cols = tuple(f"s{i}" for i in range(40))  # > WIDE_RESAMPLE_MAX_AGG_COLS
-    rows = []
-    t = 0.0
-    for _ in range(300):
-        t += rng.random() * 5.0
-        rows.append(
-            (t, *[rng.uniform(0, 10) if rng.random() < 0.1 else None for _ in cols])
-        )
-    df = _mk(spark, rows, cols)
-    stage = resample_stage(df, 1.0)  # fused at 40 cols, limit 60 s / 1 s
-    _assert_same(stage, tsops.resample_interpolate(df, 1.0, limit=60))
-    _assert_same(stage, _classic(df, 1.0, 60))
+    # 10 columns is the benchmark catalog's width, 40 a wide one
+    for n_cols in (10, 40):
+        rng = random.Random(7)
+        cols = tuple(f"s{i}" for i in range(n_cols))
+        rows = []
+        t = 0.0
+        for _ in range(300):
+            t += rng.random() * 5.0
+            rows.append(
+                (t, *[rng.uniform(0, 10) if rng.random() < 0.1 else None
+                      for _ in cols])
+            )
+        df = _mk(spark, rows, cols)
+        stage = resample_stage(df, 1.0)  # limit 60 s / 1 s
+        _assert_same(stage, tsops.resample_interpolate(df, 1.0, limit=60))
+        _assert_same(stage, _classic(df, 1.0, 60))
 
 
 def test_fused_plan_has_single_sort(spark):
@@ -163,6 +175,10 @@ def test_fused_plan_has_single_sort(spark):
     assert plan.count(") Window") == 1, plan
     assert classic.count(") Window") >= 2, classic
     assert plan.count(") Sort") < classic.count(") Sort"), (plan, classic)
+    # the stage runs the fused kernel at every width, narrow ones too
+    narrow = _mk(spark, [(float(i), 1.0, 2.0) for i in range(10)])
+    stage = explain_string(resample_stage(narrow, 1.0))
+    assert stage.count(") Window") == 1, stage
 
 
 def test_fused_partition_cols_matches_classic(spark):

@@ -296,35 +296,33 @@ def test_iqr_clip(spark):
 
 
 def test_interpolate_long_strategy_matches_wide(spark):
-    # the >8-column auto-switch must be invisible: long and wide strategies
-    # agree cell-for-cell on nulls and values
+    # the >8-column width switch must be invisible: the 12-column call
+    # (long form) agrees cell-for-cell with one call per column (wide form)
     import math
 
     from pyspark.sql import functions as F
 
+    cols = [f"c{i}" for i in range(12)]
     base = spark.range(120).select(
         F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 10).alias("timestamp"),
         *[
             (F.when((F.col("id") + i) % 5 != 0, (F.col("id") % 97) * 0.5 + i)).alias(
-                f"c{i}"
+                c
             )
-            for i in range(12)
+            for i, c in enumerate(cols)
         ],
     )
     for kwargs in ({"limit": 3}, {"limit_area": None}, {}):
-        wide = (
-            ts.interpolate_time(base, strategy="wide", **kwargs)
-            .orderBy("timestamp")
-            .collect()
-        )
-        long = (
-            ts.interpolate_time(base, strategy="long", **kwargs)
-            .orderBy("timestamp")
-            .collect()
-        )
-        assert len(wide) == len(long)
-        for rw, rl in zip(wide, long):
-            for c in [f"c{i}" for i in range(12)]:
+        long = ts.interpolate_time(base, **kwargs).orderBy("timestamp").collect()
+        for c in cols:
+            wide = (
+                ts.interpolate_time(base.select("timestamp", c), **kwargs)
+                .orderBy("timestamp")
+                .collect()
+            )
+            assert len(wide) == len(long)
+            for rw, rl in zip(wide, long):
+                assert rw["timestamp"] == rl["timestamp"]
                 vw, vl = rw[c], rl[c]
                 assert (vw is None) == (vl is None), (kwargs, c, vw, vl)
                 if vw is not None:
