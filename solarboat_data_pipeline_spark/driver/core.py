@@ -1270,24 +1270,15 @@ def pipeline_can_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     catalog = CanCatalog.from_dict(_E2E_CATALOG)
-    # materialize stage boundaries once (lazy local checkpoints): the
-    # resample spine bounds, asfreq bounds, reindex and final join each
-    # re-execute their upstream lineage otherwise — the parse ran 4×
-    # per call (resample_stage's own docstring: materialize an
-    # expensive unmaterialized lineage before the bounds job).
-    # r14 (guide §2.4): the fused parse stats job already measured the
-    # crop bounds — carry them into the resample spine and the asfreq
-    # grid (known_bounds) so neither stage re-aggregates the table.
+    # the parse stats job already measured the decoded table's bounds —
+    # carry them into the resample spine and the forecast's grid filter
+    # (known_bounds) so neither stage re-aggregates the table
     from solarboat_data_pipeline_spark.pipeline import grid_bounds
 
     stats: dict = {}
-    wide = parse_stage(
-        spark, stage, catalog, stats_out=stats
-    ).localCheckpoint(eager=False)
+    wide = parse_stage(spark, stage, catalog, stats_out=stats)
     kb = (stats["first_ts"], stats["last_ts"]) if "first_ts" in stats else None
-    res = resample_stage(wide, 1.0, known_bounds=kb).localCheckpoint(
-        eager=False
-    )
+    res = resample_stage(wide, 1.0, known_bounds=kb)
 
     fc = spark.range(0, 70).select(
         F.timestamp_micros(

@@ -559,29 +559,17 @@ def asfreq(
     period_seconds: float,
     ts_col: str = "timestamp",
     partition_cols: Sequence[str] = (),
-    known_bounds: tuple | None = None,
 ) -> DataFrame:
     """W7: ``asfreq`` — snap to an exact constant-frequency grid
     (``lib/unifier_with_forecast_data.py:42-46``): rows at missing ticks are
-    all-null; data at off-grid timestamps is dropped (exact-match join).
-
-    ``known_bounds`` (r14, guide §2.4): ``(lo, hi)`` datetimes equal to
-    ``df``'s exact ``ts_col`` min/max (e.g. carried forward from an
-    upstream resample's grid bounds) skip the bounds aggregate — one
-    full-input job dropped. ``(None, None)`` means "caller measured an
-    empty frame"."""
+    all-null; data at off-grid timestamps is dropped (exact-match join)."""
     spark = df.sparkSession
     if partition_cols:
         raise NotImplementedError("per-series asfreq: resample_mean(dense=True)")
-    if known_bounds is not None:
-        lo, hi = known_bounds
-        if lo is None:
-            return df
-    else:
-        row = df.agg(F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")).first()
-        if row is None or row["lo"] is None:
-            return df
-        lo, hi = row["lo"], row["hi"]
+    row = df.agg(F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")).first()
+    if row is None or row["lo"] is None:
+        return df
+    lo, hi = row["lo"], row["hi"]
     spine = time_spine(spark, lo, hi, period_seconds, ts_col)
     return spine.join(df, ts_col, "left")
 

@@ -8,16 +8,17 @@ across the composition (e.g. column pruning reaches the candump scan even
 for a downstream projection).
 
 Scale notes: the parse stage is embarrassingly parallel over input splits;
-resample shuffles once on the window bucket; each unify join broadcasts
-the (small) enrichment side. Partition the parquet sinks by date for
-partition pruning on re-reads.
+resample shuffles once on the window bucket; each unify stage broadcasts
+its (small) enrichment side as an interval lookup, so the telemetry grid
+is never sorted again. Partition the parquet sinks by date for partition
+pruning on re-reads.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from solarboat_data_pipeline_spark.catalog import CanCatalog
@@ -29,26 +30,12 @@ from solarboat_data_pipeline_spark.operators.parse import (
     with_timestamp,
 )
 from solarboat_data_pipeline_spark.operators.timeseries import (
-    WIDE_INTERPOLATE_MAX_COLS,
-    asfreq,
-    asof_join_backward,
+    _us,
     clean_timestamp_outliers,
-    dedup_keep_first,
-    interpolate_time,
-    reindex_interpolate,
     resample_interpolate,
 )
 from solarboat_data_pipeline_spark.sources.candump import extract_frames, scan_candump
 from solarboat_data_pipeline_spark.sources.gpx import scan_gpx
-
-# r14 (guide §2.4): below this total output width the unify stages carry
-# the telemetry columns THROUGH the reindex/as-of window instead of
-# joining the projected columns back on the grid key — each stage drops
-# one SortMergeJoin (2 Exchange + 2 Sort over the telemetry grid).
-# Guarded by width because the passthrough window's sort carries full
-# rows: for wide telemetry (the 187-column report catalog) the
-# thin-window + join-back form keeps the single-task sort small.
-UNIFY_PASSTHROUGH_MAX_COLS = 32
 
 
 def parse_stage(
@@ -134,51 +121,26 @@ def unify_forecast_stage(
     shift_back_hours: float = 0.0,
     known_bounds: tuple | None = None,
 ) -> DataFrame:
-    """E3a (``lib/unifier_with_forecast_data.py:11-104``): dedup + dense
-    reindex of telemetry, forecast reprojected onto the telemetry grid with
-    linear interpolation, then left-joined with a column prefix.
+    """E3a (``lib/unifier_with_forecast_data.py:11-104``): the forecast
+    reindexed onto the telemetry grid and interpolated linearly (clamped
+    forward after the last sample, null before the first — pandas
+    defaults), left-joined with a column prefix. One broadcast lookup,
+    cell-for-cell equal to ``reindex_interpolate`` + join.
 
-    ``known_bounds`` (r14, guide §2.4): ``(lo, hi)`` datetimes equal to
-    ``telemetry``'s exact ``ts_col`` min/max (dedup cannot change them),
-    e.g. the grid bounds of the upstream resample — skips ``asfreq``'s
-    bounds aggregate."""
-    telemetry = dedup_keep_first(telemetry, [ts_col], [ts_col])
-    telemetry = asfreq(
-        telemetry, period_seconds, ts_col=ts_col, known_bounds=known_bounds
-    )
-    if shift_back_hours:
-        shift_us = int(shift_back_hours * 3600 * 1_000_000)
-        forecast = forecast.withColumn(
-            ts_col,
-            F.timestamp_micros(
-                F.unix_micros(F.col(ts_col).cast("timestamp")) - shift_us
-            ),
-        )
+    ``telemetry`` must be a dense, unique ``period_seconds`` grid, as
+    :func:`resample_stage` returns (the reference's dedup + ``asfreq`` of
+    it are the identity there). Forecast samples off that grid or outside
+    its bounds drop, as in the reference's reindex; a duplicate forecast
+    timestamp keeps its first row. ``known_bounds``: the grid's exact
+    ``(lo, hi)``, e.g. :func:`grid_bounds` of the upstream resample —
+    skips this stage's bounds aggregate."""
+    lo, hi = known_bounds or telemetry.agg(F.min(ts_col), F.max(ts_col)).first()
+    lo, hi = _us(F.lit(lo)), _us(F.lit(hi))
+    t = _us(F.col(ts_col)) - int(shift_back_hours * 3600 * 1_000_000)
+    step_us = int(round(period_seconds * 1_000_000))
+    on_grid = forecast.where(t.between(lo, hi) & ((t - lo) % step_us == 0))
     value_cols = [c for c in forecast.columns if c != ts_col]
-    if (
-        len(telemetry.columns) + len(value_cols) <= UNIFY_PASSTHROUGH_MAX_COLS
-        and len(value_cols) <= WIDE_INTERPOLATE_MAX_COLS
-    ):
-        # passthrough form (r14, guide §2.4): the same exact-match left
-        # join puts the forecast samples on the same unique grid rows,
-        # and the interpolation windows order by the same grid
-        # timestamps — telemetry columns ride along as passengers, so
-        # the projection never needs joining back. Output is
-        # column-for-column identical to the join-back form (locked by
-        # tests/test_pipeline.py); the e2e plan drops one SortMergeJoin.
-        prefixed = [f"{prefix}{c}" for c in value_cols]
-        fc = forecast.select(
-            ts_col, *[F.col(c).alias(p) for c, p in zip(value_cols, prefixed)]
-        )
-        matched = telemetry.join(fc, ts_col, "left")
-        return interpolate_time(
-            matched, ts_col=ts_col, value_cols=prefixed, limit_area=None
-        )
-    proj = reindex_interpolate(telemetry, forecast, on=ts_col, value_cols=value_cols)
-    proj = proj.select(
-        ts_col, *[F.col(c).alias(f"{prefix}{c}") for c in value_cols]
-    )
-    return telemetry.join(proj, ts_col, "left")
+    return _interval_lookup(telemetry, on_grid, t, ts_col, prefix, value_cols, True)
 
 
 def grid_bounds(bounds: tuple, period_seconds: float) -> tuple:
@@ -209,29 +171,88 @@ def unify_gps_stage(
     value_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """E3b (``lib/process_gpx_data.py:105-200``): GPS reprojected onto the
-    telemetry timestamps with backward fill, left-joined with a prefix."""
+    telemetry timestamps with backward fill, left-joined with a prefix; a
+    duplicate GPS timestamp keeps its first row. One broadcast lookup,
+    cell-for-cell equal to ``asof_join_backward`` + join."""
     if value_cols is None:
         value_cols = [c for c in gps.columns if c != ts_col]
-    gps = dedup_keep_first(gps, [ts_col], [ts_col])
-    if len(telemetry.columns) + len(value_cols) <= UNIFY_PASSTHROUGH_MAX_COLS:
-        # passthrough form (r14, guide §2.4): the union-window as-of
-        # emits exactly one row per telemetry row with the same
-        # backward fill (right rows sort before left at ties in both
-        # forms), so the join-back on the grid key is redundant — one
-        # SortMergeJoin dropped. Width-guarded: the as-of window sorts
-        # full rows here, so wide telemetry keeps the thin form below.
-        names = [f"{prefix}{c}" for c in value_cols]
-        gp = gps.select(
-            ts_col, *[F.col(c).alias(p) for c, p in zip(value_cols, names)]
-        )
-        return asof_join_backward(telemetry, gp, on=ts_col, value_cols=names)
-    joined = asof_join_backward(
-        telemetry.select(ts_col), gps, on=ts_col, value_cols=list(value_cols)
+    t = _us(F.col(ts_col))
+    return _interval_lookup(telemetry, gps, t, ts_col, prefix, value_cols, False)
+
+
+# Bin width of the lookup's interval explode: it sizes only the broadcast
+# side; the containment filter is exact, so results do not depend on it.
+_LOOKUP_BIN_US = 1_000_000
+
+
+def _interval_lookup(
+    telemetry: DataFrame,
+    side: DataFrame,
+    side_us: Column,
+    ts_col: str,
+    prefix: str,
+    value_cols: Sequence[str],
+    interpolate: bool,
+) -> DataFrame:
+    """Left-join the small ``side`` (µs time ``side_us``) onto every
+    telemetry row as one broadcast interval lookup; only ``side`` is
+    ordered, the telemetry is never sorted or shuffled.
+
+    Same-instant side duplicates drop (first kept). Side row *i* owns
+    ``[t_i, t_{i+1})``, the last one open-ended, and carries per column
+    the last valid value at or before ``t_i`` and its time: the backward
+    as-of. ``interpolate`` adds the first valid value after ``t_i``, and
+    the row gets ``interpolate_time(limit_area=None)``'s exact expression.
+    Rows before ``t_0`` get nulls. The last-bin aggregate materialises the
+    side while the stage is built, so the side's single-task windows do
+    not queue behind the telemetry plan's stages."""
+    t = F.col("__t")
+    w = Window.orderBy(t)
+    frames = {"p": w.rowsBetween(Window.unboundedPreceding, 0)}
+    if interpolate:
+        # strictly after row i: a running frame over the reverse order (an
+        # unbounded-following frame is O(n²), see interpolate_time)
+        after = Window.orderBy(t.desc())
+        frames["n"] = after.rowsBetween(Window.unboundedPreceding, -1)
+    s = side.select(
+        side_us.alias("__t"),
+        *[F.col(c).alias(f"__v{j}") for j, c in enumerate(value_cols)],
     )
-    prefixed = joined.select(
-        ts_col, *[F.col(c).alias(f"{prefix}{c}") for c in value_cols]
+    s = s.withColumn("__lag", F.lag(t).over(w)).where(~F.col("__lag").eqNullSafe(t))
+    cols = {"__end": F.lead(t).over(w)}
+    for j in range(len(value_cols)):
+        v = F.col(f"__v{j}")
+        for k, frame in frames.items():
+            cols[f"__{k}v{j}"] = F.last(v, True).over(frame)
+            cols[f"__{k}t{j}"] = F.last(F.when(v.isNotNull(), t), True).over(frame)
+
+    def bin_of(us: Column) -> Column:
+        return F.floor(us / _LOOKUP_BIN_US)
+
+    bins = F.sequence(bin_of(t), bin_of(F.coalesce(F.col("__end") - 1, t)))
+    s = s.withColumns(cols).select(
+        *cols, "__t", F.explode(bins).alias("__bin")
+    ).localCheckpoint(eager=False)
+    last_bin = s.agg(F.max("__bin")).first()[0]
+
+    ts = _us(F.col(ts_col))
+    hit = (
+        (F.col("__bin") == F.least(bin_of(ts), F.lit(last_bin)))
+        & (t <= ts)
+        & (F.col("__end").isNull() | (ts < F.col("__end")))
     )
-    return telemetry.join(prefixed, ts_col, "left")
+    vals = []
+    for j, c in enumerate(value_cols):
+        pv, pt, nv, nt = (F.col(f"__{k}{j}") for k in ("pv", "pt", "nv", "nt"))
+        if interpolate:
+            blend = pv + (nv - pv) * ((ts - pt) / (nt - pt))
+            pv = F.when(pt == ts, pv).when(
+                pv.isNotNull() & nv.isNotNull(), blend
+            ).when(pv.isNotNull(), pv)
+        vals.append(pv.alias(f"{prefix}{c}"))
+    rest = [c for c in telemetry.columns if c != ts_col]
+    joined = telemetry.join(F.broadcast(s), hit, "left")
+    return joined.select(ts_col, *rest, *vals)
 
 
 def run_pipeline(
@@ -255,8 +276,8 @@ def run_pipeline(
         stats_out=stats,
     )
     # the parse stage already measured the decoded table's bounds — reuse
-    # them for the resample spine and the asfreq grid instead of
-    # re-aggregating the table at each stage
+    # them for the resample spine and the forecast's grid filter instead
+    # of re-aggregating the table at each stage
     kb = (stats["first_ts"], stats["last_ts"]) if "first_ts" in stats else None
     out = resample_stage(wide, period_seconds, known_bounds=kb)
     if forecast is not None:

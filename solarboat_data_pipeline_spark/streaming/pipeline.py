@@ -210,10 +210,10 @@ def stream_enrich_grid(
     value at or before t" is exactly "the value at floor(t / grid) * grid"
     — the backward as-of collapses to a stateless snap-to-grid equi-join.
     Stream-static joins keep no state at all; the static side is tiny and
-    broadcast, so each micro-batch is a map-only pass. (For a NON-gridded
-    static side, densify it first with
-    :func:`..operators.timeseries.asfreq` + forward fill in batch — the
-    join here stays the same.)
+    broadcast, so each micro-batch is a map-only pass. (A NON-gridded
+    static side needs the interval form of the same stateless lookup:
+    each static row owns ``[t_i, t_{i+1})``, as in the batch
+    :func:`..pipeline.unify_gps_stage`.)
     """
     if value_cols is None:
         value_cols = tuple(c for c in static.columns if c != ts_col)

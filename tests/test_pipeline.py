@@ -88,14 +88,11 @@ EDGE_REJECTS = """\
 def test_known_bounds_forms_match_measured(spark, catalog, forecast, tmp_path):
     """r14: every known_bounds fast path must be cell-identical to the
     measured form — the parse stats bounds fed through resample_stage,
-    the grid bounds fed through unify_forecast_stage/asfreq, and the
-    driver-side time_spine row count. Also on a corpus whose first and
+    the grid bounds fed through unify_forecast_stage, and the driver-side
+    time_spine row count. Also on a corpus whose first and
     last frames the decode rejects, where the crop bounds are not the
     decoded table's bounds."""
-    from solarboat_data_pipeline_spark.operators.timeseries import (
-        asfreq,
-        time_spine,
-    )
+    from solarboat_data_pipeline_spark.operators.timeseries import time_spine
     from solarboat_data_pipeline_spark.pipeline import grid_bounds
 
     edge = tmp_path / "edge_rejects.candump"
@@ -121,10 +118,6 @@ def test_known_bounds_forms_match_measured(spark, catalog, forecast, tmp_path):
         _rows_equal(
             unify_forecast_stage(res, forecast, 1.0),
             unify_forecast_stage(res, forecast, 1.0, known_bounds=gkb),
-        )
-        _rows_equal(
-            asfreq(res, 1.0),
-            asfreq(res, 1.0, known_bounds=gkb),
         )
         # time_spine: driver-side count (datetime bounds) vs the job form
         # (string bounds force the Spark path)
@@ -185,3 +178,94 @@ def test_unify_stages_compose_independently(spark, catalog, forecast):
     with_gps = unify_gps_stage(with_fc, track)
     assert "gps_latitude" in with_gps.columns
     assert with_gps.count() == 4
+
+
+# a 100 s grid at 250 ms, so several grid instants share each lookup bin
+GRID_N, GRID_US = 400, 250_000
+T0_US = T0 * 1_000_000
+
+
+def _grid(spark, width):
+    """Dense unique telemetry grid with ``width`` value columns, some null."""
+    return spark.range(GRID_N).select(
+        F.timestamp_micros(F.lit(T0_US) + F.col("id") * GRID_US).alias("timestamp"),
+        *[
+            F.when(F.col("id") % (j + 3) != 1, F.col("id") * 0.5 + j).alias(f"c{j}")
+            for j in range(width)
+        ],
+    )
+
+
+def _side(spark, rows, cols):
+    """Rows of ``(µs offset from T0, *values)`` as a timestamped table."""
+    return spark.createDataFrame(
+        rows, ", ".join(["dt long"] + [f"{c} double" for c in cols])
+    ).select(
+        F.timestamp_micros(F.lit(T0_US) + F.col("dt")).alias("timestamp"), *cols
+    )
+
+
+# forecast: on-grid samples with a per-column null, an off-grid sample,
+# on-grid samples before and after the grid bounds, and one on-grid
+# instant given twice
+FORECAST_ROWS = [
+    (-10_000_000, 1.0, 2.0),
+    (5_000_000, 100.0, 10.0),
+    (25_000_000, None, 30.0),
+    (30_100_000, 9999.0, 9999.0),
+    (41_250_000, 250.0, None),
+    (60_000_000, 180.0, 40.0),
+    (60_000_000, 180.0, 40.0),
+    (77_750_000, 120.0, 50.0),
+    (200_000_000, 7.0, 7.0),
+]
+# GPS: starts before the grid, one sample exactly on a grid instant,
+# irregular spacing, a per-column null and a duplicate timestamp
+GPS_ROWS = [
+    (-3_300_000, -27.0, 48.0),
+    (2_700_000, -27.1, None),
+    (10_000_000, -27.2, 48.2),
+    (10_050_000, None, 48.3),
+    (47_300_000, -27.4, 48.4),
+    (47_300_000, -27.4, 48.4),
+    (47_310_000, -27.5, 48.5),
+    (88_800_000, -27.6, 48.6),
+]
+
+
+def _cells(df):
+    return df.columns, {r["timestamp"]: tuple(r) for r in df.collect()}
+
+
+def test_unify_stages_match_reference_operators(spark):
+    """Both unify stages equal the J3/J4 operators joined back onto the
+    grid, cell for cell with ``==``, at a narrow and a wide telemetry
+    width. A duplicated forecast instant adds no grid row."""
+    from solarboat_data_pipeline_spark.operators.timeseries import (
+        asof_join_backward,
+        reindex_interpolate,
+    )
+
+    fc = _side(spark, FORECAST_ROWS, ["dni", "ghi"])
+    gps = _side(spark, GPS_ROWS, ["lat", "lon"])
+    for width in (2, 40):
+        grid = _grid(spark, width).localCheckpoint()
+        ref_fc = reindex_interpolate(
+            grid, fc.dropDuplicates(["timestamp"]), on="timestamp"
+        ).select("timestamp", F.col("dni").alias("solcast_dni"),
+                 F.col("ghi").alias("solcast_ghi"))
+        ref_gps = asof_join_backward(
+            grid.select("timestamp"), gps, on="timestamp"
+        ).select("timestamp", F.col("lat").alias("gps_lat"),
+                 F.col("lon").alias("gps_lon"))
+        kb = tuple(grid.agg(F.min("timestamp"), F.max("timestamp")).first())
+        for out, ref in (
+            (unify_forecast_stage(grid, fc, GRID_US / 1e6), ref_fc),
+            (unify_forecast_stage(grid, fc, GRID_US / 1e6, known_bounds=kb), ref_fc),
+            (unify_gps_stage(grid, gps), ref_gps),
+        ):
+            cols, got = _cells(out)
+            assert out.count() == GRID_N, width
+            ref_cols, want = _cells(grid.join(ref, "timestamp", "left"))
+            assert cols == ref_cols, width
+            assert got == want, width

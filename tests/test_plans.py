@@ -109,3 +109,33 @@ def test_hot_paths_have_no_rowwise_python(spark, qs, name):
 def test_parse_path_stays_in_codegen(spark, qs):
     a = audit(qs["s1_candump_parse"](spark, SF_DIR), execute=True)
     assert a.codegen_stages >= 1, a.plan
+
+
+def test_unify_stages_broadcast_without_window_or_shuffle(spark):
+    """Both unify stages enrich a materialised grid through a broadcast
+    lookup: the grid is never shuffled, sorted or windowed."""
+    from pyspark.sql import functions as F
+
+    from solarboat_data_pipeline_spark.pipeline import (
+        unify_forecast_stage,
+        unify_gps_stage,
+    )
+
+    t0 = 1_700_000_000 * 1_000_000
+
+    def at(step_us, n, col):
+        return spark.range(n).select(
+            F.timestamp_micros(F.lit(t0) + F.col("id") * step_us).alias("timestamp"),
+            (F.col("id") * 1.5).alias(col),
+        )
+
+    grid = at(100_000, 2_000, "v").localCheckpoint()
+    out = unify_gps_stage(
+        unify_forecast_stage(grid, at(30_000_000, 8, "dni"), 0.1),
+        at(1_300_000, 160, "lat"),
+    )
+    a = audit(out)
+    assert a.shuffles == 0, a.plan
+    assert a.broadcast_join
+    assert not a.cartesian_join
+    assert "Window" not in a.plan, a.plan
