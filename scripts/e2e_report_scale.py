@@ -293,9 +293,8 @@ def main() -> None:
 
     def run_parse() -> float:
         t0 = time.perf_counter()
-        # default two_pass crop: re-extracting frames per pass beats
-        # checkpoint materialize+re-read at this scale (identical
-        # output, verified by order-insensitive whole-table hash)
+        # construction runs the text scan and the duplicate count; the
+        # write decodes from the frame table that scan materialised
         write_parquet(
             parse_stage(spark, corpus, catalog),
             sparse_out,
@@ -490,20 +489,26 @@ def main() -> None:
     #  * per-core ms/line <= 1.5x the reference's per-process ms/line
     #    (>= ~8.7 k lines/s/core) — the narrow-catalog bench.py parse runs
     #    ~24 k lines/s/core, 1.8x faster per core than the reference.
-    grid_ok = all(
-        abs(res_rows_by_p[p] - round(span_s / p)) <= span_s / p * 0.01 + 2
-        for p in RESAMPLE_PERIODS
-    )
-    ok = (
-        abs(survival - EXPECT_SURVIVAL) < 0.005
-        and grid_ok
-        and pruned_ok
-        and fc_rows == res_rows
-        and fc_nonnull >= int(res_rows * 0.95)
-        and uni_rows == res_rows
-        and lps > 10 * 13_300
-        and lps / CPUS > 13_300 / 1.5
-    )
+    # The wall-rate bar is a machine-size bar: at 4 cores it asks for
+    # > 33 k lines/s per core. A parse that scanned the text three times
+    # ran ~18-20 k lines/s/core at 187 columns and could not meet it on
+    # 4 cores; the one-scan parse runs ~35 k, just above it. Each bar is
+    # printed on its own so a failing run shows which one failed.
+    bars = {
+        "survival": abs(survival - EXPECT_SURVIVAL) < 0.005,
+        "grid": all(
+            abs(res_rows_by_p[p] - round(span_s / p)) <= span_s / p * 0.01 + 2
+            for p in RESAMPLE_PERIODS
+        ),
+        "pruning": pruned_ok,
+        "forecast_coverage": (
+            fc_rows == res_rows and fc_nonnull >= int(res_rows * 0.95)
+        ),
+        "unify_rows": uni_rows == res_rows,
+        "wall_rate": lps > 10 * 13_300,
+        "per_core": lps / CPUS > 13_300 / 1.5,
+    }
+    ok = all(bars.values())
     print(
         json.dumps(
             {
@@ -527,6 +532,7 @@ def main() -> None:
                 "total_sec": round(
                     parse_sec + sum(res_secs.values()) + fc_sec + uni_sec, 2
                 ),
+                "bars": bars,
                 "ok": ok,
             }
         )

@@ -45,20 +45,21 @@ def with_timestamp(frames: DataFrame, offset_seconds: float = 0.0) -> DataFrame:
     return frames.withColumn("timestamp", ts)
 
 
-def file_order_bounds(frames: DataFrame) -> DataFrame:
-    """P4 bounds as one row ``(first_ts, last_ts)``: the timestamps of the
-    first and last frame *in file order* (``lib/canparser.py:207-212`` —
-    first/last are trusted, intermediates may be corrupt). The order key
-    includes the (file, block-offset) metadata keys from
-    ``extract_frames`` — required once the corpus spans multiple splits,
-    where bare ``monotonically_increasing_id`` is not file-ordered."""
+def file_order_bounds(frames: DataFrame) -> list[Column]:
+    """P4 bounds as two aggregate columns ``first_ts``, ``last_ts``: the
+    timestamps of the first and last frame *in file order*
+    (``lib/canparser.py:207-212`` — first/last are trusted, intermediates
+    may be corrupt). The order key includes the (file, block-offset)
+    metadata keys from ``extract_frames`` — required once the corpus spans
+    multiple splits, where bare ``monotonically_increasing_id`` is not
+    file-ordered."""
     from solarboat_data_pipeline_spark.sources.candump import ORDER_COLS
 
     order = F.struct(*[c for c in ORDER_COLS if c in frames.columns])
-    return frames.agg(
+    return [
         F.min_by("timestamp", order).alias("first_ts"),
         F.max_by("timestamp", order).alias("last_ts"),
-    )
+    ]
 
 
 def crop_to_bounds(frames: DataFrame) -> DataFrame:
@@ -67,7 +68,7 @@ def crop_to_bounds(frames: DataFrame) -> DataFrame:
     bounds so the plan stays lazy and scales: one cheap agg pass + a
     map-side filter."""
     return (
-        frames.crossJoin(F.broadcast(file_order_bounds(frames)))
+        frames.crossJoin(F.broadcast(frames.agg(*file_order_bounds(frames))))
         .where(F.col("timestamp").between(F.col("first_ts"), F.col("last_ts")))
         .drop("first_ts", "last_ts")
     )

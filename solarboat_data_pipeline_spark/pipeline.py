@@ -3,9 +3,9 @@
 Composes the stage kernels in the reference's order
 (``main_2022.py:159-163``): parse → resample → unify-forecast → unify-GPS.
 Each stage is also usable alone; this module only wires DataFrames
-together, so Catalyst sees ONE logical plan per stage run and optimizes
-across the composition (e.g. column pruning reaches the candump scan even
-for a downstream projection).
+together, so Catalyst optimizes across the composition. The parse stage
+is the one lineage cut: it materialises the extracted frames once, so the
+candump text is scanned and regex-matched once per run.
 
 Scale notes: the parse stage is embarrassingly parallel over input splits;
 resample shuffles once on the window bucket; each unify stage broadcasts
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from solarboat_data_pipeline_spark.catalog import CanCatalog
@@ -49,10 +49,14 @@ def parse_stage(
 ) -> DataFrame:
     """E1 (``lib/canparser.py:263-364``): candump text → decoded wide table.
 
-    Construction runs two eager thin jobs. The first measures the P4 crop
-    bounds (:func:`operators.parse.file_order_bounds`), which fold into
-    literal filters. The second is :func:`operators.parse.decode_wide`'s
-    duplicate count over the cropped frames that match the catalog.
+    Construction scans the text once. One eager job materialises the
+    extracted frames, cut to timestamp and payload (``localCheckpoint``),
+    and measures the P4 crop bounds on the way as observed metrics
+    (:func:`operators.parse.file_order_bounds`); the bounds fold into
+    literal filters. A second thin job over that table is
+    :func:`operators.parse.decode_wide`'s duplicate count over the cropped
+    frames that match the catalog, and the returned plan decodes from the
+    same table.
 
     ``stats_out``: pass a dict and it receives that second job's
     ``first_ts``/``last_ts`` — the returned table's exact timestamp
@@ -63,14 +67,18 @@ def parse_stage(
     which can drop edge rows."""
     frames = extract_frames(scan_candump(spark, path))
     frames = with_timestamp(frames, offset_seconds=offset_seconds)
-    bounds = file_order_bounds(frames).first()
+    frames = with_frame_meta(frames, mab20_workaround=mab20_workaround)
+    seen = Observation()
+    frames = frames.observe(seen, *file_order_bounds(frames)).select(
+        "timestamp", "signature", "topic_id", "payload_len", "payload_hex"
+    ).localCheckpoint(eager=True)
+    bounds = seen.get
     # an empty corpus has null bounds, and the null filter keeps nothing
     frames = frames.where(
         F.col("timestamp").between(
             F.lit(bounds["first_ts"]), F.lit(bounds["last_ts"])
         )
     )
-    frames = with_frame_meta(frames, mab20_workaround=mab20_workaround)
     wide, stats = _decode_wide(frames, catalog, downcast=True)
     if clean_outliers:
         return clean_timestamp_outliers(wide)
@@ -265,7 +273,8 @@ def run_pipeline(
     offset_seconds: float = 0.0,
     mab20_workaround: bool = False,
 ) -> DataFrame:
-    """The full reference flow (``main_2022.py:159-163``), one logical plan."""
+    """The full reference flow (``main_2022.py:159-163``), one logical plan
+    over the parse stage's materialised frame table."""
     stats: dict = {}
     wide = parse_stage(
         spark,

@@ -3,13 +3,15 @@ visible in the physical plans of the headline queries — filters pushed to
 the scan, dimension joins broadcast, sub-quadratic near-dup joins, no
 O(n²) window frames."""
 
+import os
+
 import pytest
 
 from solarboat_data_pipeline_spark import driver_queries as dq
 from solarboat_data_pipeline_spark.plans import audit
 from solarboat_data_pipeline_spark.plans.audit import read_schemas
 
-from tests.conftest import TESTDATA_ROOT
+from tests.conftest import DATA_DIR, TESTDATA_ROOT
 
 SF_DIR = f"{TESTDATA_ROOT}/sf0.001"
 
@@ -139,3 +141,14 @@ def test_unify_stages_broadcast_without_window_or_shuffle(spark):
     assert a.broadcast_join
     assert not a.cartesian_join
     assert "Window" not in a.plan, a.plan
+
+
+def test_parse_stage_scans_the_text_once(spark):
+    """parse_stage materialises the extracted frames while it is built;
+    the returned plan reads that table, not the candump text again."""
+    from solarboat_data_pipeline_spark.catalog import CanCatalog
+    from solarboat_data_pipeline_spark.pipeline import parse_stage
+
+    catalog = CanCatalog.load(os.path.join(DATA_DIR, "mini_can_ids.json"))
+    a = audit(parse_stage(spark, os.path.join(DATA_DIR, "sample.candump"), catalog))
+    assert "Scan text" not in a.plan, a.plan
