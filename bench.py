@@ -255,8 +255,6 @@ HEADLINE = [
     "a3_w3_fused_grid",        # fused dense-grid resample+interpolate (group form)
     "f7_poa_irradiance",       # NOAA solar position + POA, pure codegen
     "k_bucketed_join",         # zero-Exchange bucketed-layout join
-    # round 5
-    "mm_png_decode",           # REAL PNG decode in Arrow mapInPandas
     # round 6: previously unrepresented families + the streaming as-of
     "samp_token_budget",       # token-budget sampling family
     "sim_ann_lsh",             # hyperplane-LSH bucketed ANN
@@ -279,25 +277,9 @@ HEADLINE = [
     "sim_sq8_topk",            # 1-byte asymmetric candidates + exact re-rank
     # round 10: projection-shaped streaming wide decode (entry-list state)
     "st_stream_decode_wide",
-    # round 10: compressed-video probe lane (ISO BMFF + bit-level H.264
-    # SPS in Arrow mapInPandas — representative of the mp4/vp9 family)
-    "mm_mp4_probe",
-    # round 11: container-to-pixels (real coded IDR samples in MP4 →
-    # avcC param sets → seek table → NAL unpack → intra pixel decode)
-    "mm_mp4_pixels",
-    # round 12: perceptual near-dup (decode → dHash → banded Hamming
-    # join), the media→ANN retrieval composition (decode → pooled
-    # features → trained persisted IVF → DPP-pruned probe), and the
-    # audio/video fingerprint lanes on the same banded join
-    "mm_phash_near_dup",
-    "pipeline_media_retrieval",
-    "aud_fingerprint_near_dup",
-    "vid_fingerprint_near_dup",
     # round 13: the reference's actual four-stage product under timing
-    # (parse → resample → unify-forecast → unify-GPS, one artifact), and
-    # the sha256-collapse → perceptual-near-dup curation order
+    # (parse → resample → unify-forecast → unify-GPS, one artifact)
     "pipeline_can_e2e",
-    "pipeline_media_dedup",
 ]
 
 

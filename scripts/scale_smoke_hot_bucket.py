@@ -2,9 +2,9 @@
 
 Plants ONE pathological (band, key) bucket — ``n_hot`` DISTINCT
 signatures sharing band-0 key (the near-black-images shape: not exact
-copies, so :func:`phash_clusters_scaled`'s hash-class collapse cannot
-help) — plus ``n_pairs`` true near-dup pairs recoverable via non-hot
-bands. Band 1 of hot member i is i itself and band 2 its 21-bit
+copies, so an exact-hash collapse ahead of the join cannot help) —
+plus ``n_pairs`` true near-dup pairs recoverable via non-hot bands.
+Band 1 of hot member i is i itself and band 2 its 21-bit
 complement, so distinct hot members sit at pairwise Hamming >= 2 > the
 threshold (max_hamming=1) and every hot member's band-1/band-2 key is
 unique — the ONLY hot bucket is the planted band-0 one. Adjacent
@@ -28,15 +28,16 @@ Usage: python scripts/scale_smoke_hot_bucket.py [n_hot] (default 131_072)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from solarboat_data_pipeline_spark import get_spark
-from solarboat_data_pipeline_spark.operators import perceptual as pc
+from solarboat_data_pipeline_spark.operators import dedup as dd
 
 N_HOT = int(sys.argv[1]) if len(sys.argv) > 1 else 131_072
 N_PAIRS = 1_000
@@ -85,19 +86,23 @@ def main() -> None:
     assert n == N_HOT + 2 * N_PAIRS
 
     t0 = time.perf_counter()
-    capped = pc.banded_hamming_pairs(
-        sig, max_hamming=1, bits=BITS, bands=BANDS, bucket_cap=CAP
+    capped = dd.banded_signature_pairs(
+        sig, max_hamming=1, sig_col="phash", id_col="media_id",
+        bits=BITS, bands=BANDS, bucket_cap=CAP,
     )
     n_capped = capped.count()
     t_capped = time.perf_counter() - t0
 
-    hot_acct = pc.banded_hot_buckets(
-        sig, CAP, bits=BITS, bands=BANDS
+    hot_acct = dd.banded_hot_buckets(
+        sig, CAP, sig_col="phash", id_col="media_id", bits=BITS, bands=BANDS
     ).collect()
     assert [(r.band, r.key, r.n) for r in hot_acct] == [(0, HOT_KEY, N_HOT)], hot_acct
 
     t0 = time.perf_counter()
-    uncapped = pc.banded_hamming_pairs(sig, max_hamming=1, bits=BITS, bands=BANDS)
+    uncapped = dd.banded_signature_pairs(
+        sig, max_hamming=1, sig_col="phash", id_col="media_id",
+        bits=BITS, bands=BANDS,
+    )
     n_uncapped = uncapped.count()
     t_uncapped = time.perf_counter() - t0
 

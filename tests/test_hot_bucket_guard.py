@@ -66,7 +66,10 @@ TRUE_PAIRS = {(10_000, 10_001, 1), (10_002, 10_003, 1)}
 
 
 def _pairs(df, **kw):
-    out = pc.banded_hamming_pairs(df, max_hamming=2, bits=BITS, bands=BANDS, **kw)
+    out = dd.banded_signature_pairs(
+        df, max_hamming=2, sig_col="phash", id_col="media_id",
+        bits=BITS, bands=BANDS, **kw,
+    )
     return {tuple(r) for r in out.collect()}
 
 
@@ -79,7 +82,9 @@ def test_capped_pairs_identical_when_true_pairs_share_nonhot_band(spark):
 
 def test_hot_bucket_accounting_lists_exactly_the_planted_bucket(spark):
     sig = _corpus(spark, n_hot=40)
-    hot = pc.banded_hot_buckets(sig, 10, bits=BITS, bands=BANDS).collect()
+    hot = dd.banded_hot_buckets(
+        sig, 10, sig_col="phash", id_col="media_id", bits=BITS, bands=BANDS
+    ).collect()
     # 40 hot rows + pair A's in-bucket member = 41
     assert [(r.band, r.key, r.n) for r in hot] == [(0, HOT_KEY, 41)]
 
@@ -88,10 +93,14 @@ def test_cap_boundary_is_strictly_greater_than(spark):
     # n == cap kept (no drops), n == cap - 1 also kept; dropping starts
     # strictly above the cap
     sig = _corpus(spark, n_hot=40)
-    assert pc.banded_hot_buckets(sig, 41, bits=BITS, bands=BANDS).count() == 0
+    assert dd.banded_hot_buckets(
+        sig, 41, sig_col="phash", id_col="media_id", bits=BITS, bands=BANDS
+    ).count() == 0
     assert _pairs(sig, bucket_cap=41) == TRUE_PAIRS
     with pytest.raises(ValueError, match="bucket_cap"):
-        pc.banded_hot_buckets(sig, 0, bits=BITS, bands=BANDS).count()
+        dd.banded_hot_buckets(
+            sig, 0, sig_col="phash", id_col="media_id", bits=BITS, bands=BANDS
+        ).count()
 
 
 def test_pair_confined_to_hot_bucket_is_dropped_and_accounted(spark):
@@ -107,21 +116,27 @@ def test_pair_confined_to_hot_bucket_is_dropped_and_accounted(spark):
     assert ham == 2
     assert (50_000, 50_001, 2) in _pairs(df)
     assert (50_000, 50_001, 2) not in _pairs(df, bucket_cap=10)
-    hot = pc.banded_hot_buckets(df, 10, bits=BITS, bands=BANDS).collect()
+    hot = dd.banded_hot_buckets(
+        df, 10, sig_col="phash", id_col="media_id", bits=BITS, bands=BANDS
+    ).collect()
     assert [(r.band, r.key) for r in hot] == [(0, HOT_KEY)]
 
 
 def test_guard_plan_uses_bounded_broadcast_anti_join(spark):
     sig = _corpus(spark, n_hot=40)
     plan = explain_string(
-        pc.banded_hamming_pairs(
-            sig, max_hamming=2, bits=BITS, bands=BANDS, bucket_cap=10
+        dd.banded_signature_pairs(
+            sig, max_hamming=2, sig_col="phash", id_col="media_id",
+            bits=BITS, bands=BANDS, bucket_cap=10,
         )
     )
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     # unguarded plan has no anti-join at all
     plan0 = explain_string(
-        pc.banded_hamming_pairs(sig, max_hamming=2, bits=BITS, bands=BANDS)
+        dd.banded_signature_pairs(
+            sig, max_hamming=2, sig_col="phash", id_col="media_id",
+            bits=BITS, bands=BANDS,
+        )
     )
     assert "LeftAnti" not in plan0
 
@@ -199,8 +214,9 @@ def test_banded_pairs_match_brute_force(spark, sigs, mh_bands):
     want = _brute_pairs(stored, max_hamming)
     got = {
         tuple(r)
-        for r in pc.banded_hamming_pairs(
-            df, max_hamming=max_hamming, bits=63, bands=bands
+        for r in dd.banded_signature_pairs(
+            df, max_hamming=max_hamming, sig_col="phash", id_col="media_id",
+            bits=63, bands=bands,
         ).collect()
     }
     assert got == want
@@ -229,14 +245,17 @@ def test_capped_pairs_are_sound_and_accounted(spark, sigs):
     cap = 2
     got = {
         tuple(r)
-        for r in pc.banded_hamming_pairs(
-            df, max_hamming=2, bits=63, bands=3, bucket_cap=cap
+        for r in dd.banded_signature_pairs(
+            df, max_hamming=2, sig_col="phash", id_col="media_id",
+            bits=63, bands=3, bucket_cap=cap,
         ).collect()
     }
     assert got <= want
     hot = {
         (r.band, r.key)
-        for r in pc.banded_hot_buckets(df, cap, bits=63, bands=3).collect()
+        for r in dd.banded_hot_buckets(
+            df, cap, sig_col="phash", id_col="media_id", bits=63, bands=3
+        ).collect()
     }
 
     def bands_of(sig):

@@ -71,6 +71,15 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
+def test_driver_window_is_priority():
+    # the driver checks the first 50 names of queries(); _PRIORITY is
+    # that window, so it must hold exactly 50 names and lead queries()
+    from solarboat_data_pipeline_spark.driver_queries import _PRIORITY
+
+    assert len(_PRIORITY) == 50
+    assert list(ALL_QUERIES)[:50] == _PRIORITY
+
+
 @pytest.mark.parametrize("name", sorted(ALL_QUERIES))
 def test_query_matches_oracle(spark, ducks, name):
     q = ALL_QUERIES[name]

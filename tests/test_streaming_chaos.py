@@ -47,8 +47,9 @@ def _stop_after_first_commit(q, timeout=90):
     than one batch's worth are pending."""
     deadline = time.time() + timeout
     while time.time() < deadline:
-        p = q.lastProgress
-        if p and p.get("numInputRows", 0) > 0:
+        # recentProgress, not lastProgress: a no-data batch (watermark
+        # advance) may report right after the first data batch
+        if any(p.get("numInputRows", 0) > 0 for p in q.recentProgress):
             q.stop()
             q.awaitTermination(60)
             return
@@ -410,27 +411,37 @@ def test_auto_asof_flip_survives_midstream_kill(spark, tmp_path):
                 os.utime(os.path.join(root, f), (mtime, mtime))
         os.utime(path, (mtime, mtime))
 
-    # each file SOURCE advances one file per trigger independently, so
-    # pad the right source with other-key files to position the late
-    # right in the 4th right-batch — the trigger AFTER key a's t=260
-    # left emitted on the fast path
-    write_one(f"{src}/r/r0.parquet", [("a", 100, 10.0)],
-              "series string, epoch long, ref double", 0)
-    write_one(f"{src}/r/rp1.parquet", [("pad", 102, 0.0)],
-              "series string, epoch long, ref double", 1)
-    write_one(f"{src}/r/rp2.parquet", [("pad", 151, 0.0)],
-              "series string, epoch long, ref double", 2)
     left_data = [
         ("a", 101, 1.0), ("a", 150, 2.0), ("a", 260, 3.0),
         ("a", 300, 4.0), ("a", 400, 5.0), ("a", 500, 6.0),
     ]
-    for i, row in enumerate(left_data):
-        write_one(f"{src}/l/b{i}.parquet", [row],
-                  "series string, epoch long, value double", 1 + i)
-    # late right: key a's t=250 arrives in the batch AFTER its t=260
-    # left emitted on the fast path -> cross-batch disorder -> flip
-    write_one(f"{src}/r/r1.parquet", [("a", 250, 20.0)],
-              "series string, epoch long, ref double", 4)
+
+    def write_rest():
+        # each file SOURCE advances one file per trigger independently,
+        # so pad the right source with other-key files to position the
+        # late right in the 4th right-batch — the trigger AFTER key a's
+        # t=260 left emitted on the fast path
+        write_one(f"{src}/r/rp1.parquet", [("pad", 102, 0.0)],
+                  "series string, epoch long, ref double", 1)
+        write_one(f"{src}/r/rp2.parquet", [("pad", 151, 0.0)],
+                  "series string, epoch long, ref double", 2)
+        for i, row in enumerate(left_data[1:], start=1):
+            write_one(f"{src}/l/b{i}.parquet", [row],
+                      "series string, epoch long, value double", 1 + i)
+        # late right: key a's t=250 arrives in the batch AFTER its t=260
+        # left emitted on the fast path -> cross-batch disorder -> flip
+        write_one(f"{src}/r/r1.parquet", [("a", 250, 20.0)],
+                  "series string, epoch long, ref double", 4)
+
+    # only the first batch's files exist while the first query runs: a
+    # kill while it plans a second batch can log a new file in one
+    # source's metadata but not in the offset log, and the restart then
+    # hands that source two files in one batch, which shifts the late
+    # right one batch behind the t=300 left
+    write_one(f"{src}/r/r0.parquet", [("a", 100, 10.0)],
+              "series string, epoch long, ref double", 0)
+    write_one(f"{src}/l/b0.parquet", [left_data[0]],
+              "series string, epoch long, value double", 1)
 
     out = str(tmp_path / "out.parquet")
     ckpt = str(tmp_path / "ckpt")
@@ -464,6 +475,7 @@ def test_auto_asof_flip_survives_midstream_kill(spark, tmp_path):
         .start()
     )
     _stop_after_first_commit(q)
+    write_rest()
     q2 = (
         build()
         .writeStream.format("parquet")
