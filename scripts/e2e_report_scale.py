@@ -247,6 +247,14 @@ def synthetic_track(spark, n_seconds: int):
     )
 
 
+def compiled(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far. A stage's
+    delta is its ``compiles``: 0 on a steady pass means every class came
+    from the session's codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     spark = get_spark(app_name="e2e-report-scale")
     shutil.rmtree(WORK, ignore_errors=True)
@@ -260,6 +268,7 @@ def main() -> None:
     n_cols = len(catalog.wide_columns())
 
     corpus = os.path.join(WORK, "candump")
+    c0 = compiled(spark)
     gen_sec = generate_corpus(
         spark, catalog, corpus,
         file_splits=REPORT_FILES if REPORT else None,
@@ -272,6 +281,7 @@ def main() -> None:
                 "wide_columns": n_cols,
                 "files": REPORT_FILES if REPORT else "partitioned",
                 "sec": gen_sec,
+                "compiles": compiled(spark) - c0,
             }
         ),
         flush=True,
@@ -291,8 +301,8 @@ def main() -> None:
     # steady-state rate a long job actually sustains).
     sparse_out = os.path.join(WORK, "parsed_sparse.parquet")
 
-    def run_parse() -> float:
-        t0 = time.perf_counter()
+    def run_parse() -> tuple[float, int]:
+        c0, t0 = compiled(spark), time.perf_counter()
         # construction runs the text scan and the duplicate count; the
         # write decodes from the frame table that scan materialised
         write_parquet(
@@ -300,20 +310,21 @@ def main() -> None:
             sparse_out,
             mode="overwrite",
         )
-        return round(time.perf_counter() - t0, 2)
+        return round(time.perf_counter() - t0, 2), compiled(spark) - c0
 
-    parse_cold_sec = run_parse()
+    parse_cold_sec, parse_cold_compiles = run_parse()
     print(
         json.dumps(
             {
                 "stage": "parse_cold",
                 "sec": parse_cold_sec,
                 "lines_per_sec": round(N_LINES / parse_cold_sec),
+                "compiles": parse_cold_compiles,
             }
         ),
         flush=True,
     )
-    parse_sec = run_parse()
+    parse_sec, parse_compiles = run_parse()
     parse_rows = spark.read.parquet(sparse_out).count()
     survival = parse_rows / N_LINES
     lps = N_LINES / parse_sec
@@ -327,6 +338,7 @@ def main() -> None:
                 "lines_per_sec": round(lps),
                 "lines_per_sec_per_core": round(lps / CPUS),
                 "ms_per_line_per_core": round(CPUS / lps * 1000, 4),
+                "compiles": parse_compiles,
             }
         ),
         flush=True,
@@ -337,24 +349,24 @@ def main() -> None:
     # 1 s output keeps the cold/steady split, further periods run once
     res_secs: dict[float, float] = {}
     res_rows_by_p: dict[float, int] = {}
-    res_cold_sec = None
+    res_cold_sec = res_cold_compiles = None
     res_out = ""
     for period in RESAMPLE_PERIODS:
         p_out = os.path.join(WORK, f"resampled_{period}s.parquet")
 
-        def run_resample() -> float:
-            t0 = time.perf_counter()
+        def run_resample() -> tuple[float, int]:
+            c0, t0 = compiled(spark), time.perf_counter()
             write_parquet(
                 resample_stage(spark.read.parquet(sparse_out), period),
                 p_out,
                 mode="overwrite",
             )
-            return round(time.perf_counter() - t0, 2)
+            return round(time.perf_counter() - t0, 2), compiled(spark) - c0
 
         if period == 1.0:
-            res_cold_sec = run_resample()
+            res_cold_sec, res_cold_compiles = run_resample()
             res_out = p_out
-        sec = run_resample()
+        sec, compiles = run_resample()
         rows = spark.read.parquet(p_out).count()
         res_secs[period] = sec
         res_rows_by_p[period] = rows
@@ -366,6 +378,8 @@ def main() -> None:
                     "rows_out": rows,
                     "cold_sec": res_cold_sec if period == 1.0 else None,
                     "sec": sec,
+                    "cold_compiles": res_cold_compiles if period == 1.0 else None,
+                    "compiles": compiles,
                 }
             ),
             flush=True,
@@ -384,7 +398,7 @@ def main() -> None:
     # ~30% faster at this file-count-to-size ratio (measured 21.8 s vs
     # 30.8 s steady) — at 100 TB the crop savings dominate that.
     sparse_part_out = os.path.join(WORK, "parsed_sparse_by_day.parquet")
-    t0 = time.perf_counter()
+    c0, t0 = compiled(spark), time.perf_counter()
     write_parquet(
         spark.read.parquet(sparse_out).withColumn(
             "day", F.to_date("timestamp")
@@ -435,6 +449,7 @@ def main() -> None:
                 "partition_filter_in_plan": pruned_in_plan,
                 "rows_out": day_rows,
                 "sec": day_sec,
+                "compiles": compiled(spark) - c0,
                 "ok": pruned_ok,
             }
         ),
@@ -445,7 +460,7 @@ def main() -> None:
     # grid onto the 1 s telemetry grid (the fourth reference stage —
     # main_2022.py:159-163 runs parse → resample → forecast → GPS)
     span_s = N_LINES * DT_US // 1_000_000
-    t0 = time.perf_counter()
+    c0, t0 = compiled(spark), time.perf_counter()
     fc = spark.range(0, span_s // 30 + 2).select(
         F.timestamp_seconds(F.lit(BASE_EPOCH) + F.col("id") * 30).alias("timestamp"),
         ((F.col("id") % 90) * 10.0).alias("dni"),
@@ -462,13 +477,14 @@ def main() -> None:
         json.dumps({
             "stage": "unify_forecast", "rows_out": fc_rows,
             "dni_nonnull": fc_nonnull, "sec": fc_sec,
+            "compiles": compiled(spark) - c0,
         }),
         flush=True,
     )
 
     # E3b unify-GPS: backward as-of join of the 1 Hz track, chained on
     # the forecast-enriched grid (the full four-stage composition)
-    t0 = time.perf_counter()
+    c0, t0 = compiled(spark), time.perf_counter()
     unified = unify_gps_stage(
         fc_read, synthetic_track(spark, span_s)
     )
@@ -477,7 +493,8 @@ def main() -> None:
     uni_sec = round(time.perf_counter() - t0, 2)
     uni_rows = spark.read.parquet(uni_out).count()
     print(
-        json.dumps({"stage": "unify", "rows_out": uni_rows, "sec": uni_sec}),
+        json.dumps({"stage": "unify", "rows_out": uni_rows, "sec": uni_sec,
+                    "compiles": compiled(spark) - c0}),
         flush=True,
     )
 

@@ -10,7 +10,8 @@ Two output shapes:
 
 * :func:`decode_long` — one row per decoded signal (the reference's
   intermediate "tall" table built at ``lib/canparser.py:106-111,159-169``),
-  via a single generated CASE producing ``array<struct>`` + ``explode``.
+  via :func:`decode_indexed`'s literal spec-map lookup + ``explode``, with
+  the signal names and unit attached from a literal array.
 * :func:`decode_wide` — the pivoted wide table (``lib/canparser.py:222-239``)
   computed as a per-frame projection: each matched frame decodes directly
   to its wide row, and the A1 same-µs mean runs as a ``groupBy`` only when
@@ -144,12 +145,9 @@ def decode_indexed(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     position in ``catalog.wide_columns()`` order — the internal shape for
     the wide pivot at scale.
 
-    Unlike the per-topic generated CASE of :func:`decode_long` — whose
-    single CaseWhen expression overflows Janino's 64 KB method limit on
-    wide catalogs (50+ topics) and knocks the whole stage out of
-    whole-stage codegen into interpreted eval — the catalog here is a
-    CONSTANT-FOLDED literal ``map<key, struct<size, fields>>`` looked up
-    per frame, and the field decode is one small GENERIC expression over
+    The catalog is a CONSTANT-FOLDED literal
+    ``map<key, struct<size, fields>>`` looked up per frame, and the field
+    decode is one small GENERIC expression over
     ``(byte_offset, bit_offset, width, scale)`` applied after the explode.
     Codegen size is O(1) in catalog width, so the decode stays compiled
     for the reference's 233-signal schema and beyond. Dropping the three

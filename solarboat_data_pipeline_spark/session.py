@@ -73,6 +73,16 @@ def get_spark(
         # this, identical ~12 s steady state). Constant-size methods also
         # keep every stage JIT-eligible at any catalog width.
         .config("spark.sql.codegen.methodSplitThreshold", "256")
+        # Spark's compiled-class cache holds 100 generated classes by default
+        # (static conf: only the builder can set it). One 10-column 100 ms
+        # run_pipeline + write_parquet uses 130, so every steady run evicted
+        # the last run's classes and compiled all 130 again (executor CPU
+        # 2.8 -> 1.45 s per run with them cached, 4 cores). Measured working
+        # sets in one session: that run 130, a fresh input 12 more, the
+        # 187-column 1 s pipeline 32 more (183 in all); all 158 driver
+        # queries of scripts/oracle_sweep.py 1,729 at sf0.01 and 1,738 at
+        # sf0.1. 2000 covers the largest.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # the default 240 MB code cache fills after a few dozen
         # whole-stage-codegen plans, silently disabling the JIT — long
         # sessions then run generated code interpreted (~10x slower)

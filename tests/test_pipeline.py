@@ -269,3 +269,26 @@ def test_unify_stages_match_reference_operators(spark):
             ref_cols, want = _cells(grid.join(ref, "timestamp", "left"))
             assert cols == ref_cols, width
             assert got == want, width
+
+
+def _compiles(spark):
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_steady_pipeline_run_compiles_nothing(spark, catalog, forecast, tmp_path):
+    """A repeated run reuses every class the first one generated: the
+    session's generated-class cache holds the pipeline's working set, so a
+    steady run compiles nothing."""
+    from solarboat_data_pipeline_spark.sources.sinks import write_parquet
+
+    def run(tag):
+        df = run_pipeline(spark, CORPUS, catalog, period_seconds=1.0,
+                          forecast=forecast, gpx_path=GPX)
+        write_parquet(df, str(tmp_path / tag))
+
+    run("first")
+    before = _compiles(spark)
+    run("second")
+    assert _compiles(spark) - before == 0
