@@ -4,9 +4,10 @@ The reference decodes CAN payloads with runtime-generated ctypes
 ``LittleEndianStructure`` classes (reference ``lib/canparser_generator.py:29-54``)
 driven by a JSON catalog (loader ``lib/canparser.py:36-50``). Here the same
 catalog is compiled on the driver into each signal's byte offset, bit
-offset, width and scale, which ``operators/parse.py`` turns into native
-Spark expressions at plan-build time, so the whole decode stays inside
-whole-stage codegen (no Python on the data path).
+offset, width and scale. ``operators/parse.py`` writes those, in one walk
+of the catalog, into each decode plan as SQL text (a literal topic-key →
+field-spec map, a name/unit array, per-column decodes), so the whole
+decode stays inside whole-stage codegen (no Python on the data path).
 
 Faithfully reproduced reference quirks (do not "fix"):
 

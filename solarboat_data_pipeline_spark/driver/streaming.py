@@ -263,7 +263,7 @@ def st_stream_decode_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     events — with a second same-µs frame for every 7th event so the A1
     duplicate merge actually merges — is staged, read through
     ``readStream.text``, and decoded by the projection-shaped streaming
-    kernel (fixed-expression slot decode, watermark-bounded entry-list
+    kernel (per-frame ``transform`` decode, watermark-bounded entry-list
     state). The oracle replays the u16-LE/u8 decode and the per-µs mean
     arithmetically."""
     from solarboat_data_pipeline_spark.catalog import CanCatalog

@@ -2,9 +2,12 @@
 
 Covers P2-P12, A1, A2, P17 from SURVEY.md §2 in pure native expressions —
 the reference's per-row ctypes loop (``lib/canparser.py:74-187``) becomes
-schema-driven codegen: every topic's decode is a generated ``Column`` over
-the hex payload, so the whole stage runs inside whole-stage codegen with no
-Python on the data path.
+schema-driven SQL: :func:`_catalog_sql` walks the catalog once and writes
+what a decode needs of it as SQL text, and one field decoder
+(:func:`_field_sql`) reads each signal out of the hex payload. A plan is
+parsed from a few strings instead of built from py4j ``Column`` calls per
+signal, and the whole stage runs inside whole-stage codegen with no Python
+on the data path.
 
 Two output shapes:
 
@@ -20,21 +23,12 @@ Two output shapes:
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from solarboat_data_pipeline_spark.catalog import SEPARATOR, CanCatalog
-
-SIGNAL_STRUCT = T.StructType(
-    [
-        T.StructField("module_name", T.StringType()),
-        T.StructField("topic_name", T.StringType()),
-        T.StructField("byte_name", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("unit", T.StringType()),
-    ]
-)
 
 
 def with_timestamp(frames: DataFrame, offset_seconds: float = 0.0) -> DataFrame:
@@ -108,27 +102,16 @@ def decode_long(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     ``lib/canparser.py:135-157``), then attaches the signal's name
     strings + unit from a constant-folded metadata array indexed by the
     signal's wide-column position."""
-    meta = []
-    for mod, top in catalog.iter_topics():
-        for s in top.signals:
-            meta.append(
-                F.struct(
-                    F.lit(mod.name).alias("module_name"),
-                    F.lit(top.name).alias("topic_name"),
-                    F.lit(s.name).alias("byte_name"),
-                    F.lit(s.unit).alias("unit"),
-                )
-            )
-    if not meta:
-        raise ValueError("empty catalog")
-    named = F.get(F.array(*meta), F.col("idx"))
-    return decode_indexed(frames, catalog).select(
+    names = _catalog_sql(catalog).names
+    return decode_indexed(frames, catalog).selectExpr(
+        "timestamp", f"get({names}, idx) AS __n", "value"
+    ).selectExpr(
         "timestamp",
-        named["module_name"].alias("module_name"),
-        named["topic_name"].alias("topic_name"),
-        named["byte_name"].alias("byte_name"),
+        "__n.module_name AS module_name",
+        "__n.topic_name AS topic_name",
+        "__n.byte_name AS byte_name",
         "value",
-        named["unit"].alias("unit"),
+        "__n.unit AS unit",
     )
 
 
@@ -146,201 +129,172 @@ def decode_indexed(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     the wide pivot at scale.
 
     The catalog is a CONSTANT-FOLDED literal
-    ``map<key, struct<size, fields>>`` looked up per frame, and the field
-    decode is one small GENERIC expression over
-    ``(byte_offset, bit_offset, width, scale)`` applied after the explode.
-    Codegen size is O(1) in catalog width, so the decode stays compiled
-    for the reference's 233-signal schema and beyond. Dropping the three
-    name strings + unit per signal row (≈40 bytes → 12) also shrinks both
+    ``map<key, struct<size, fields>>`` looked up per frame, and
+    :func:`_field_sql` with the exploded field struct as its geometry is
+    one small GENERIC expression applied after the explode. Codegen size
+    is O(1) in catalog width, so the decode stays compiled for the
+    reference's 233-signal schema and beyond. Dropping the three name
+    strings + unit per signal row (≈40 bytes → 12) also shrinks both
     pivot shuffles ~3×."""
-    matched = _matched_frames(frames, catalog)
-    s = matched.select(
-        "timestamp",
-        "__w",
-        F.explode("_spec.fields").alias("f"),
-    )
-    return s.select(
-        "timestamp",
-        F.col("f.idx").alias("idx"),
-        _decode_field(F.col("__w"), F.col("f")).alias("value"),
+    return (
+        _matched_frames(frames, _catalog_sql(catalog))
+        .selectExpr("timestamp", "__w", "explode(_spec.fields) AS f")
+        .selectExpr("timestamp", "f.idx AS idx", f"{_FIELD_OF_F} AS value")
     )
 
 
-def _payload_words(catalog: CanCatalog) -> Column:
-    """The hex payload parsed ONCE per frame into big-endian-text 4-byte
-    words (zero right-padding is harmless: the size guard keeps every
-    field inside the real payload) — the per-field decode is then pure
-    long arithmetic instead of two string F.conv parses per signal row
-    (same-session A/B at 6 M lines / 187 columns: best pass 7.4 → 6.3 s,
-    medians within noise — the explode + pivot shuffle dominate this
-    stage; the word form also keeps the explode payload fixed-width).
-    The word count comes from the catalog's LARGEST topic, so payloads
-    beyond classic CAN's 8 bytes (CAN FD, synthetic frames) decode at any
-    offset the catalog can declare — the packed layout guarantees every
-    field ends at or before the topic size."""
-    n_words = max(2, -(-max(t.size for _, t in catalog.iter_topics()) // 4))
-    ph = F.rpad(F.col("payload_hex"), 8 * n_words, "0")
-    return F.array(
-        *[
-            F.conv(ph.substr(8 * w + 1, 8), 16, 10).cast("long")
-            for w in range(n_words)
-        ]
+def _sql_quote(text: str, mark: str = "'") -> str:
+    """``text`` as a SQL string literal (``mark="'"``) or a backquoted
+    identifier (``mark="`"``). Catalog names and units are outside input,
+    so a quote, a backslash or a backtick in them must stay text."""
+    if mark == "`":
+        return "`" + text.replace("`", "``") + "`"
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# the topic key of a frame: signature·4096 + topic_id
+_KEY = "signature * 4096 + topic_id"
+
+
+@dataclass(frozen=True)
+class _CatalogSql:
+    """A catalog as the SQL text its decodes are parsed from."""
+
+    words: str  # payload_hex → array<bigint> of big-endian 4-byte words
+    spec: str  # map<key, struct<size, fields: array<struct<idx, off, bit, width, scale>>>>
+    keys: str  # "key, key, …" for an IN list
+    sizes: str  # map<key, size>: the payload-length guard
+    names: str  # array<struct<module_name, topic_name, byte_name, unit>> by idx
+    wide: list[tuple[str, str]]  # (wide column, its CASE decode over __k, __w)
+
+
+def _catalog_sql(catalog: CanCatalog) -> _CatalogSql:
+    """The one catalog-to-plan builder: a single walk of
+    ``catalog.iter_topics()`` (signal ``idx`` = ``catalog.wide_columns()``
+    position) emits every catalog-derived part of a decode plan as SQL
+    text. A literal ``map(...)``/``array(...)`` folds to one constant, so
+    the executed plan probes it per frame, and building it costs a few
+    parsed strings however wide the catalog is (py4j ``Column`` calls per
+    signal cost ~57-60 k round trips at 280 columns; SCALE.md
+    "Catalog as SQL text").
+
+    The hex payload is parsed ONCE per frame into 4-byte words, so each
+    field decode is long arithmetic instead of two string ``conv`` parses
+    (same-session A/B at 6 M lines / 187 columns: best pass 7.4 → 6.3 s).
+    The words are sized by the catalog's LARGEST topic, so
+    payloads beyond classic CAN's 8 bytes (CAN FD, synthetic frames)
+    decode at any offset the catalog can declare — the packed layout
+    guarantees every field ends at or before the topic size, and the size
+    guard keeps every field inside the real payload, so the zero
+    right-padding is never read."""
+    spec, keys, sizes, names, wide = [], [], [], [], []
+    largest = 0
+    for mod, top in catalog.iter_topics():
+        largest = max(largest, top.size)
+        k = mod.signature * 4096 + top.topic_id
+        fields = []
+        for s in top.signals:
+            # the shortest round-trip decimal of the double, DOUBLE-typed:
+            # Spark parses it back to the exact same double
+            scale = f"{s.scale!r}D"
+            fields.append(
+                f"named_struct('idx', {len(wide)}, 'off', {s.byte_offset},"
+                f" 'bit', {s.bit_offset}, 'width', {s.bit_width},"
+                f" 'scale', {scale})"
+            )
+            names.append(
+                f"named_struct('module_name', {_sql_quote(mod.name)},"
+                f" 'topic_name', {_sql_quote(top.name)},"
+                f" 'byte_name', {_sql_quote(s.name)},"
+                f" 'unit', {_sql_quote(s.unit)})"
+            )
+            decode = _field_sql(
+                "__w", str(s.byte_offset), str(s.bit_offset), str(s.bit_width), scale
+            )
+            wide.append((
+                SEPARATOR.join([mod.name, top.name, s.name]),
+                f"CASE WHEN __k = {k} THEN {decode} END",
+            ))
+        spec.append(
+            f"{k}, named_struct('size', {top.size}, 'fields', array({', '.join(fields)}))"
+        )
+        keys.append(str(k))
+        sizes.append(f"{k}, {top.size}")
+    if not names:
+        raise ValueError("empty catalog")
+    n_words = max(2, -(-largest // 4))
+    padded = f"rpad(payload_hex, {8 * n_words}, '0')"
+    words = ", ".join(
+        f"CAST(conv(substr({padded}, {8 * w + 1}, 8), 16, 10) AS BIGINT)"
+        for w in range(n_words)
+    )
+    return _CatalogSql(
+        words=f"array({words})",
+        spec=f"map({', '.join(spec)})",
+        keys=", ".join(keys),
+        sizes=f"map({', '.join(sizes)})",
+        names=f"array({', '.join(names)})",
+        wide=wide,
     )
 
 
-def _matched_frames(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
+def _field_sql(words: str, off: str, bit: str, width: str, scale: str) -> str:
+    """The one field decoder, as SQL text: the field at byte ``off``, bit
+    ``bit``, ``width`` bits wide (16, 8 or a 1-bit bitfield), times
+    ``scale``, read from the payload's 4-byte ``words`` as a DOUBLE.
+    Semantics of the reference's ctypes ``LittleEndianStructure`` access
+    (``lib/canparser_generator.py:29-54``): LE u16 fuse, LSB-run
+    bitfields, unit scaling folded into ``scale``.
+
+    The geometry is SQL text too. Literals (:func:`decode_wide`) fold at
+    plan time: the width ``CASE`` drops to its one arm, and each byte's
+    word index and shift become constants. Struct fields
+    (:func:`decode_indexed`, the stream decode) give one small generic
+    expression. A byte is non-negative, so the bitfield's shift is an
+    exact floor-division by ``2^bit``."""
+
+    def byte(o: str) -> str:
+        return (
+            f"(shiftright(element_at({words}, CAST({o} DIV 4 AS INT) + 1),"
+            f" (3 - {o} % 4) * 8) & 255)"
+        )
+
+    lo = byte(off)
+    raw = (
+        f"CASE WHEN {width} = 16 THEN {lo} + {byte(f'({off} + 1)')} * 256"
+        f" WHEN {width} = 8 THEN {lo} ELSE shiftright({lo}, {bit}) & 1 END"
+    )
+    return f"CAST({raw} AS DOUBLE) * {scale}"
+
+
+# the generic decode of a field-spec struct ``f`` (see _catalog_sql.spec)
+_FIELD_OF_F = _field_sql("__w", "f.off", "f.bit", "f.width", "f.scale")
+
+
+def _matched_frames(frames: DataFrame, cat: _CatalogSql) -> DataFrame:
     """Frames that match a catalog topic (key + size guard), with the
     topic's field-spec struct attached as ``_spec``. The catalog is a
     constant-folded literal map, so the lookup is a per-row map probe.
     Reference parity: the (signature, topic) dispatch + payload-size
     guard of ``lib/canparser.py:81-90,135-157`` (unknown frames and
     wrong-length payloads silently dropped)."""
-    idx_of = {c: i for i, c in enumerate(catalog.wide_columns())}
-    entries = []
-    for mod, top in catalog.iter_topics():
-        key = mod.signature * 4096 + top.topic_id
-        fields = [
-            F.struct(
-                F.lit(
-                    idx_of[SEPARATOR.join([mod.name, top.name, s.name])]
-                ).alias("idx"),
-                F.lit(s.byte_offset).alias("off"),
-                F.lit(s.bit_offset).alias("bit"),
-                F.lit(s.bit_width).alias("width"),
-                F.lit(s.scale).alias("scale"),
-            )
-            for s in top.signals
-        ]
-        entries += [
-            F.lit(key),
-            F.struct(
-                F.lit(top.size).alias("size"), F.array(*fields).alias("fields")
-            ),
-        ]
-    if not entries:
-        raise ValueError("empty catalog")
-    spec = F.element_at(
-        F.create_map(*entries),
-        (F.col("signature") * 4096 + F.col("topic_id")).cast("int"),
-    )
-    return frames.select(
+    return frames.selectExpr(
         "timestamp",
-        _payload_words(catalog).alias("__w"),
-        spec.alias("_spec"),
-    ).where(F.col("_spec").isNotNull() & (F.col("payload_len") == F.col("_spec.size")))
-
-
-def _byte_at(words: Column, off: Column) -> Column:
-    """Payload byte ``off`` (0-based) out of the pre-parsed 4-byte word
-    array. shiftright() only takes a literal shift count, so the
-    within-word position dispatches through a 4-arm literal-shift CASE —
-    still one codegen expression, no string work."""
-    w = F.element_at(words, (off / 4).cast("int") + 1)
-    p = off % 4
-    return (
-        F.when(p == 0, F.shiftright(w, 24))
-        .when(p == 1, F.shiftright(w, 16))
-        .when(p == 2, F.shiftright(w, 8))
-        .otherwise(w)
-    ).bitwiseAND(255)
-
-
-def _decode_field(words: Column, f: Column) -> Column:
-    """Generic field decode over the pre-parsed payload words given one
-    field-spec struct ``(idx, off, bit, width, scale)`` — small fixed
-    codegen. Semantics of the reference's ctypes
-    ``LittleEndianStructure`` access
-    (``lib/canparser_generator.py:29-54``): LE u16 fuse, LSB-run
-    bitfields, unit scaling folded into ``scale``."""
-    lo = _byte_at(words, f["off"])
-    raw = (
-        F.when(f["width"] == 16, lo + _byte_at(words, f["off"] + 1) * 256)
-        .when(f["width"] == 8, lo)
-        # bitfield: the shift count is a per-field COLUMN, so divide by
-        # the power-of-two literal instead (exact for byte-range values)
-        .otherwise(
-            F.floor(
-                lo
-                / F.element_at(
-                    F.array(*[F.lit(1 << b) for b in range(8)]),
-                    f["bit"].cast("int") + 1,
-                )
-            )
-            .cast("long")
-            .bitwiseAND(1)
-        )
-    )
-    return raw.cast("double") * f["scale"]
-
-
-def _byte_at_static_sql(words_col: str, off: int) -> str:
-    """:func:`_byte_at` with a LITERAL offset, as SQL text — the word
-    index and within-word shift resolve at plan time, so the byte read is
-    one ``element_at`` + literal shift + mask instead of a 4-arm CASE."""
-    w = f"element_at({words_col}, {off // 4 + 1})"
-    shift = (3 - off % 4) * 8
-    inner = f"shiftright({w}, {shift})" if shift else w
-    return f"({inner} & 255)"
-
-
-def _decode_field_static_sql(
-    words_col: str, off: int, bit: int, width: int, scale: float
-) -> str:
-    """:func:`_decode_field` with LITERAL field geometry, as SQL text:
-    the width/offset dispatch happens in Python at plan time, emitting
-    just the 2-3 arithmetic ops the field actually needs (same semantics
-    — ctypes ``LittleEndianStructure`` access, LE u16 fuse, LSB-run
-    bitfields, scale folded in). Why text: a 187-column
-    catalog's projection built through the Column API costs ~2,000 py4j
-    round trips ≈ 8-10 s of driver time PER plan build (measured on the
-    6 M-line bench row — more than the executed scan itself); the same
-    tree parsed from one string per column is ~20× cheaper to build and
-    resolves to the identical expressions, so decoded values are
-    bit-identical. ``{scale!r}D`` is the shortest-roundtrip decimal of
-    the Python double with Spark's DOUBLE-literal suffix — both parse
-    via round-to-nearest, so the literal is the exact same double."""
-    lo = _byte_at_static_sql(words_col, off)
-    if width == 16:
-        raw = f"({lo} + {_byte_at_static_sql(words_col, off + 1)} * 256)"
-    elif width == 8:
-        raw = lo
-    else:  # LSB-run bitfield: lo >= 0, so shiftright == floor-div by 2^bit
-        raw = f"(shiftright({lo}, {bit}) & 1)"
-    return f"CAST({raw} AS DOUBLE) * {scale!r}D"
-
-
-# a CAN payload is at most 8 bytes, so a topic decodes to at most 8 fused
-# fields — the streaming wide decode fills all slots with fixed expressions
-MAX_TOPIC_FIELDS = 8
+        f"{cat.words} AS __w",
+        f"element_at({cat.spec}, {_KEY}) AS _spec",
+    ).where("_spec IS NOT NULL AND payload_len = _spec.size")
 
 
 def _decode_frame_entries(frames: DataFrame, catalog: CanCatalog) -> DataFrame:
     """One row PER FRAME with its decoded ``(idx, value)`` entry array —
-    no explode, no shuffle: each possible field slot is decoded by a
-    fixed generic expression (null-idx slots filtered out). The slot
-    count is the CATALOG's widest topic (≥ the classic-CAN 8 so existing
-    plans are unchanged) — pinned at 8, a >8-byte CAN FD topic's tail
-    fields would silently null here while the batch decode reads them."""
-    matched = _matched_frames(frames, catalog)
-    n_slots = max(
-        MAX_TOPIC_FIELDS,
-        max(len(t.signals) for _, t in catalog.iter_topics()),
+    no explode, no shuffle: the matched topic's field specs map through
+    :func:`_field_sql` in one higher-order ``transform``, so a topic of
+    any width decodes."""
+    return _matched_frames(frames, _catalog_sql(catalog)).selectExpr(
+        "timestamp",
+        "transform(_spec.fields,"
+        f" f -> named_struct('idx', f.idx, 'value', {_FIELD_OF_F})) AS _sv",
     )
-    slots = []
-    for k in range(n_slots):
-        # F.get is 0-based and null past the end (element_at throws there
-        # under ANSI mode)
-        f = F.get(F.col("_spec.fields"), k)
-        slots.append(
-            F.struct(
-                f["idx"].alias("idx"),
-                _decode_field(F.col("__w"), f).alias("value"),
-            )
-        )
-    entries = F.filter(
-        F.array(*slots), lambda x: x["idx"].isNotNull()
-    )
-    return matched.select("timestamp", entries.alias("_sv"))
 
 
 def _merge_entries_mean(arr: Column) -> Column:
@@ -359,18 +313,6 @@ def _merge_entries_mean(arr: Column) -> Column:
     return F.when(
         F.size(idxs) == F.size(arr), F.map_from_entries(arr)
     ).otherwise(F.map_from_arrays(idxs, F.transform(idxs, mean_of)))
-
-
-def _extract_wide_cols(
-    m: DataFrame, cols: list[str], downcast: bool
-) -> DataFrame:
-    """(timestamp, _m map<idx,value>) → the static wide schema."""
-    val = lambda i: F.col("_m").getItem(i)  # noqa: E731
-    if downcast:
-        val = lambda i: F.col("_m").getItem(i).cast("float")  # noqa: E731
-    return m.select(
-        "timestamp", *[val(i).alias(c) for i, c in enumerate(cols)]
-    )
 
 
 def pivot_wide(
@@ -421,8 +363,9 @@ def decode_wide(
 ) -> DataFrame:
     """A1+A2 wide decode (``lib/canparser.py:222-239``, groupby-mean +
     unstack) as a per-frame projection: each frame matching a catalog
-    topic decodes directly to its wide row — statically specialized
-    expressions per column (:func:`_decode_field_static_sql`), no
+    topic decodes directly to its wide row — one ``CASE`` per column
+    over :func:`_field_sql` with LITERAL field geometry, which constant
+    folding specializes to the 2-3 arithmetic ops the field needs; no
     explode. Unknown frames and wrong-length payloads drop, as in
     :func:`decode_long`.
 
@@ -450,28 +393,13 @@ def _decode_wide(
             "decode_wide is batch-only: its duplicate-timestamp count runs"
             " eagerly — decode a stream with streaming.stream_decode_wide"
         )
-    cols = catalog.wide_columns()
-    topics = list(catalog.iter_topics())
-    if not topics:
-        raise ValueError("empty catalog")
-    key = (F.col("signature").cast("long") * 4096 + F.col("topic_id"))
-    keys, size_entries = [], []
-    for mod, top in topics:
-        k = mod.signature * 4096 + top.topic_id
-        keys.append(k)
-        size_entries += [F.lit(k), F.lit(top.size)]
-    base = frames.select(
+    cat = _catalog_sql(catalog)
+    base = frames.selectExpr(
         "timestamp",
-        key.alias("__k"),
-        F.col("payload_len").alias("__len"),
-        _payload_words(catalog).alias("__w"),
-    ).where(
-        F.col("__k").isin(keys)
-        & (
-            F.col("__len")
-            == F.element_at(F.create_map(*size_entries), F.col("__k"))
-        )
-    )
+        f"{_KEY} AS __k",
+        "payload_len AS __len",
+        f"{cat.words} AS __w",
+    ).where(f"__k IN ({cat.keys}) AND __len = element_at({cat.sizes}, __k)")
     # the scan prunes to the timestamp and the match keys
     stats = (
         base.groupBy("timestamp")
@@ -483,25 +411,16 @@ def _decode_wide(
         )
         .first()
     )
-    idx_of = {c: i for i, c in enumerate(cols)}
-    # SQL-text projection: one parsed string per wide column instead of
-    # ~10 py4j Column calls per column — see _decode_field_static_sql
-    exprs: list[str | None] = [None] * len(cols)
-    for mod, top in topics:
-        k = mod.signature * 4096 + top.topic_id
-        for s in top.signals:
-            name = SEPARATOR.join([mod.name, top.name, s.name])
-            decode = _decode_field_static_sql(
-                "__w", s.byte_offset, s.bit_offset, s.bit_width, s.scale
-            )
-            exprs[idx_of[name]] = f"CASE WHEN __k = {k} THEN {decode} END"
+    exprs = [e for _, e in cat.wide]
     if stats["dup_n"]:
         # the mean of a single value is that value, so unique timestamps
         # come out of the merge unchanged
         exprs = [f"avg({e})" for e in exprs]
     if downcast:
         exprs = [f"CAST({e} AS FLOAT)" for e in exprs]
-    out = [F.expr(f"{e} AS `{c}`") for e, c in zip(exprs, cols)]
+    out = [
+        F.expr(f"{e} AS {_sql_quote(c, '`')}") for e, (c, _) in zip(exprs, cat.wide)
+    ]
     if stats["dup_n"]:
         return base.groupBy("timestamp").agg(*out), stats
     return base.select("timestamp", *out), stats

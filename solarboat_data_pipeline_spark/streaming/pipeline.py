@@ -77,10 +77,11 @@ def stream_decode_wide(
 
     Batch ``decode_wide`` counts duplicate timestamps in an EAGER pass
     before it picks its plan — impossible on an unbounded source. Here
-    the per-frame decode stays a pure projection (a fixed-expression slot
-    decode per frame: no explode, no spec-struct materialization, no
-    per-row Python) and the A1 same-µs duplicate merge runs as a
-    WATERMARK-BOUNDED streaming aggregate keyed by timestamp:
+    the per-frame decode stays a pure projection (one higher-order
+    ``transform`` of the matched topic's field specs through the batch
+    decodes' field decoder: no explode, no per-row Python) and the A1
+    same-µs duplicate merge runs as a WATERMARK-BOUNDED streaming
+    aggregate keyed by timestamp:
 
     * per-key state is the frame's decoded ``(idx, value)`` entry list —
       ~tens of bytes per unique timestamp in the watermark span, NOT a
@@ -95,16 +96,16 @@ def stream_decode_wide(
 
     The one shuffle per micro-batch carries thin ``(timestamp, entries)``
     rows — the wide row materializes only AFTER the merge, once per
-    unique timestamp. Reference parity: ``lib/canparser.py:222-239``
-    (groupby-mean + unstack), chunked analogue ``lib/canparser.py:306``.
+    unique timestamp, in one ``selectExpr``. Reference parity:
+    ``lib/canparser.py:222-239`` (groupby-mean + unstack), chunked
+    analogue ``lib/canparser.py:306``.
     """
     from solarboat_data_pipeline_spark.operators.parse import (
         _decode_frame_entries,
-        _extract_wide_cols,
         _merge_entries_mean,
+        _sql_quote,
     )
 
-    cols = catalog.wide_columns()
     per_frame = _decode_frame_entries(frames, catalog)
     merged = (
         per_frame.withWatermark("timestamp", watermark)
@@ -112,7 +113,14 @@ def stream_decode_wide(
         .agg(F.flatten(F.collect_list("_sv")).alias("_sv"))
         .select("timestamp", _merge_entries_mean(F.col("_sv")).alias("_m"))
     )
-    return _extract_wide_cols(merged, cols, downcast)
+    value = "CAST(_m[{}] AS FLOAT)" if downcast else "_m[{}]"
+    return merged.selectExpr(
+        "timestamp",
+        *[
+            f"{value.format(i)} AS {_sql_quote(c, '`')}"
+            for i, c in enumerate(catalog.wide_columns())
+        ],
+    )
 
 
 def stream_resample_mean(

@@ -187,13 +187,14 @@ def test_crop_bounds_multi_file_order(spark, tmp_path):
 
 
 def test_randomized_decode_parity_vs_python_reference(spark, tmp_path):
-    """Seeded-random catalogs + payloads, decoded cell-for-cell three
-    ways: the per-frame projection (`decode_wide`, literal field
-    geometry), the index-keyed long path pivoted (word-arithmetic
-    `_decode_field`), and a pure-Python byte decoder implementing the
-    ctypes LittleEndianStructure semantics directly. Duplicate-timestamp
-    frames exercise the A1 mean; wrong-length payloads and unknown
-    signatures must drop."""
+    """Seeded-random catalogs + payloads: the per-frame projection
+    (`decode_wide`, the field decoder with literal geometry) and the
+    index-keyed long path pivoted (the same decoder over the exploded
+    field-spec struct) must each equal, cell for cell, a pure-Python byte
+    decoder that implements the ctypes LittleEndianStructure semantics
+    directly and shares no code with them. Duplicate-timestamp frames
+    exercise the A1 mean; wrong-length payloads and unknown signatures
+    must drop."""
     import random
 
     rng = random.Random(0xC0FFEE)
@@ -305,8 +306,8 @@ def test_decode_handles_payloads_beyond_8_bytes(spark):
         "topic_id int, payload_len int",
     )
     # every wide form must decode the >8-byte tail identically (the
-    # streaming slot decode once capped at 8 slots and silently nulled
-    # tail fields; on a batch frame it runs as a plain aggregate)
+    # stream decode maps over the topic's fields whatever their count;
+    # on a batch frame it runs as a plain aggregate)
     from solarboat_data_pipeline_spark.streaming import stream_decode_wide
 
     for name, wide in (
@@ -324,6 +325,51 @@ def test_decode_handles_payloads_beyond_8_bytes(spark):
     # a duplicate-free input decodes as a pure projection: no aggregate
     plan = decode_wide(frames, cat)._jdf.queryExecution().optimizedPlan()
     assert "Aggregate" not in plan.toString(), plan.toString()
+
+
+def test_decode_quotes_catalog_names_and_units(spark):
+    """Catalog names and units are outside input and enter the decode
+    plans as SQL string literals and identifiers: a quote, a backslash
+    (here before an ``n``) and a backtick in them must come out of every
+    decode unchanged, next to correctly decoded values."""
+    import datetime
+
+    from solarboat_data_pipeline_spark.catalog import SEPARATOR
+    from solarboat_data_pipeline_spark.streaming import stream_decode_wide
+
+    mod, top = "M'o\\d`", "T`'\\n"
+    cat = CanCatalog.from_dict({"modules": [{
+        "name": mod, "signature": 0xAB, "topics": [{
+            "name": top, "id": 0x30, "bytes": [
+                {"name": "sig", "type": "u8", "units": ""},
+                {"name": "a`b", "type": "u8", "units": "V'\\`/10"},
+                {"name": "c'd\\", "type": "u16", "units": ""},
+            ]}]}]})
+    payload = bytes([0xAB, 7, 0x34, 0x12])
+    frames = spark.createDataFrame(
+        [(datetime.datetime(2023, 1, 1), payload.hex(), 0xAB, 0x30, len(payload))],
+        "timestamp timestamp, payload_hex string, signature int, "
+        "topic_id int, payload_len int",
+    )
+    want = {"sig": (171.0, ""), "a`b": (0.7, "V'\\`"), "c'd\\": (4660.0, "")}
+
+    got = {
+        (r["module_name"], r["topic_name"], r["byte_name"]): (r["value"], r["unit"])
+        for r in decode_long(frames, cat).collect()
+    }
+    assert set(got) == {(mod, top, name) for name in want}
+    for (_, _, name), (value, unit) in got.items():
+        assert value == pytest.approx(want[name][0]), name
+        assert unit == want[name][1], name
+
+    for form, wide in (
+        ("decode_wide", decode_wide(frames, cat, downcast=False)),
+        ("stream_decode_wide", stream_decode_wide(frames, cat, downcast=False)),
+    ):
+        r = wide.first()
+        for name, (value, _) in want.items():
+            col = SEPARATOR.join([mod, top, name])
+            assert r[col] == pytest.approx(value), (form, col)
 
 
 def _widened(catalog_path):

@@ -152,3 +152,24 @@ def test_parse_stage_scans_the_text_once(spark):
     catalog = CanCatalog.load(os.path.join(DATA_DIR, "mini_can_ids.json"))
     a = audit(parse_stage(spark, os.path.join(DATA_DIR, "sample.candump"), catalog))
     assert "Scan text" not in a.plan, a.plan
+
+
+def test_decode_wide_literal_geometry_folds(spark):
+    """decode_wide calls the one field decoder with literal geometry, and
+    constant folding specializes it: the optimized plan keeps one CASE
+    per wide column (its topic-key test) and compares no field width."""
+    import datetime
+    import re
+
+    from solarboat_data_pipeline_spark.catalog import CanCatalog
+    from solarboat_data_pipeline_spark.operators.parse import decode_wide
+
+    catalog = CanCatalog.load(os.path.join(DATA_DIR, "mini_can_ids.json"))
+    frames = spark.createDataFrame(
+        [(datetime.datetime(2023, 1, 1), "fa0102", 0xFA, 0x08, 3)],
+        "timestamp timestamp, payload_hex string, signature int, "
+        "topic_id int, payload_len int",
+    )
+    plan = decode_wide(frames, catalog)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("CASE WHEN") == len(catalog.wide_columns()), plan
+    assert not re.search(r"= (?:16|8)\b", plan), plan
